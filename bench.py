@@ -178,12 +178,11 @@ def skew_lww_bench() -> None:
     """`python bench.py --skew-lww`: hot-key skew datapoint for the LWW
     reduction (round-5 verdict task; SURVEY §4 skew handling). Builds a
     change log where ONE (repo, path) key holds ~30% of all events — the
-    adversarial mega-entity shape — and times resolve_lww over it in
-    every mode: `maxseq` (winner agg + broadcast join-back; partial
-    aggregation collapses the hot key map-side), `maxseq_shuffle` (same agg,
-    shuffle join-back), `agg` (single max_by struct agg) and
-    `salted_window` (two-phase salted window — the mode built FOR skew).
-    Prints one JSON line."""
+    adversarial mega-entity shape — and times resolve_lww over it with
+    both join-backs: `broadcast` (``max_broadcast_keys=None``) and
+    `shuffle` (``max_broadcast_keys=1``, which also runs the winner count).
+    Partial aggregation of ``max(seq)`` collapses the hot key map-side in
+    both. Prints one JSON line."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -220,21 +219,20 @@ def skew_lww_bench() -> None:
         hot = src.filter("repo = 'megarepo'").count()
         out["hot_key_share"] = round(hot / src.count(), 3)
 
-        def timed(mode: str) -> float:
+        def timed(max_broadcast_keys: int | None) -> float:
             best = None
             for _ in range(3):
                 t0 = time.perf_counter()
-                resolve_lww(src, mode=mode,
-                            max_broadcast_keys=None).count()
+                resolve_lww(src, max_broadcast_keys=max_broadcast_keys).count()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             return round(best, 3)
 
         # ONE untimed warm-up lap for codegen/page cache (timed() would
         # burn three full resolves to warm what one covers)
-        resolve_lww(src, mode="maxseq", max_broadcast_keys=None).count()
-        for mode in ("maxseq", "maxseq_shuffle", "agg", "salted_window"):
-            out[mode] = timed(mode)
+        resolve_lww(src, max_broadcast_keys=None).count()
+        for join_back, ceiling in (("broadcast", None), ("shuffle", 1)):
+            out[join_back] = timed(ceiling)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print(_json.dumps(out))

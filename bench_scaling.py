@@ -38,7 +38,6 @@ WORKER = r"""
 import json, os, sys, time
 n_exec = int(sys.argv[1]); cores = int(sys.argv[2]); log_dir = sys.argv[3]
 out_dir = sys.argv[4]; delivered = int(sys.argv[5])
-lww_mode = os.environ.get("SPARK_GRAFT_SCALE_LWW", "maxseq")
 total_cores = n_exec * cores
 from nostr_data_pipeline_spark.session import get_spark
 spark = get_spark(
@@ -65,11 +64,11 @@ warm = SnapshotTable(os.path.join(out_dir, "warm"), num_buckets=8)
 wdir = os.path.join(out_dir, "warmlog")
 spark.read.schema(LOG_SCHEMA).parquet(log_dir).limit(20000) \
     .write.mode("overwrite").parquet(wdir)
-replay_log(spark, warm, wdir, n_batches=1, collect_lineage=False, lww_mode=lww_mode)
+replay_log(spark, warm, wdir, n_batches=1, collect_lineage=False)
 # timed run
 table = SnapshotTable(os.path.join(out_dir, "tbl"), num_buckets=max(32, total_cores))
 t0 = time.perf_counter()
-replay_log(spark, table, log_dir, n_batches=1, collect_lineage=False, lww_mode=lww_mode)
+replay_log(spark, table, log_dir, n_batches=1, collect_lineage=False)
 dt = time.perf_counter() - t0
 print(json.dumps({"executors": n_exec, "cores_per_executor": cores,
                   "total_cores": total_cores, "sec": round(dt, 2),
@@ -82,7 +81,6 @@ LOCAL_WORKER = r"""
 import json, os, sys, time
 n_cores = int(sys.argv[1]); log_dir = sys.argv[2]; delivered = int(sys.argv[3])
 out_dir = sys.argv[4]
-lww_mode = os.environ.get("SPARK_GRAFT_SCALE_LWW", "maxseq")
 from nostr_data_pipeline_spark.session import get_spark
 spark = get_spark(f"pinned-{n_cores}", cores=n_cores,
                   shuffle_partitions=max(8, n_cores))
@@ -92,10 +90,10 @@ warm = SnapshotTable(os.path.join(out_dir, "warm"), num_buckets=8)
 wdir = os.path.join(out_dir, "warmlog")
 spark.read.schema(LOG_SCHEMA).parquet(log_dir).limit(20000) \
     .write.mode("overwrite").parquet(wdir)
-replay_log(spark, warm, wdir, n_batches=1, collect_lineage=False, lww_mode=lww_mode)
+replay_log(spark, warm, wdir, n_batches=1, collect_lineage=False)
 table = SnapshotTable(os.path.join(out_dir, "tbl"), num_buckets=32)
 t0 = time.perf_counter()
-replay_log(spark, table, log_dir, n_batches=1, collect_lineage=False, lww_mode=lww_mode)
+replay_log(spark, table, log_dir, n_batches=1, collect_lineage=False)
 dt = time.perf_counter() - t0
 print(json.dumps({"cores": n_cores, "sec": round(dt, 2),
                   "events_per_sec": round(delivered / dt, 1)}))
@@ -118,10 +116,9 @@ def _touch_pages(log_dir: str) -> None:
     sandbox artifact, not a parallelism property; holding the cache warm
     is the faithful proxy."""
     buf = bytearray(1 << 20)
-    for name in os.listdir(log_dir):
-        p = os.path.join(log_dir, name)
-        if os.path.isfile(p):
-            with open(p, "rb", buffering=0) as f:
+    for root, _dirs, names in os.walk(log_dir):
+        for name in names:
+            with open(os.path.join(root, name), "rb", buffering=0) as f:
                 while f.readinto(buf):
                     pass
 

@@ -10,8 +10,9 @@ Pipeline per (micro-)batch — all DataFrame-native, exactly ONE wide shuffle
 of the batch (the LWW aggregation) before the merge join:
 1. split off ``schema_change`` rows (tiny; metadata commits — evolution is
    order-independent, see SnapshotTable.evolve_column),
-2. LWW-resolve per (repo, path) via partial-aggregating ``max_by`` — this
-   also subsumes the reference's in-batch dedup
+2. LWW-resolve per (repo, path) via a partial-aggregating ``max(seq)``
+   and the winner join-back (cdc/lww.py) — this also subsumes the
+   reference's in-batch dedup
    (/root/reference/src/nostr_pipeline/pipeline.py:202-211): verbatim
    duplicate event_ids cannot change the (seq, event_id)-max winner,
 3. normalize + sha256 the winning content via the vectorized pandas UDF,
@@ -21,10 +22,11 @@ of the batch (the LWW aggregation) before the merge join:
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -101,7 +103,6 @@ class ReplayResult:
 
 
 def prepare_batch(batch: DataFrame, table: SnapshotTable,
-                  lww_mode: str = "maxseq", salt: int = 16,
                   max_broadcast_keys: int | None = 5_000_000,
                   stats: dict | None = None,
                   group_expr: Any = None,
@@ -111,17 +112,17 @@ def prepare_batch(batch: DataFrame, table: SnapshotTable,
 
     Shuffle discipline (this is the hot path of the primary metric):
     - NO explicit dropDuplicates shuffle: duplicate event_ids are verbatim
-      redeliveries, so the LWW ``max_by`` on (seq, event_id) picks the same
-      winner with or without them — in-batch dedup is subsumed by conflict
-      resolution (one shuffle instead of two). Cross-batch redelivery is
-      handled by the seq-guard in MERGE (strict '>' makes replays no-ops).
+      redeliveries, so the LWW ``(seq, event_id)`` winner is the same with
+      or without them — in-batch dedup is subsumed by conflict resolution
+      (one shuffle instead of two). Cross-batch redelivery is handled by the
+      seq-guard in MERGE (strict '>' makes replays no-ops).
     - sha256 (the Arrow-batched pandas UDF) runs AFTER resolution, on winners
       only — never on LWW losers or duplicate copies.
     - ``extra_json`` travels raw; evolved columns are virtual (projected at
       read time), so no parse happens here.
     - the broadcast-OOM guard lives inside resolve_lww (the winner set is
       counted post-aggregation); pass ``stats`` to share the persisted
-      winner set between the guard count and the join-back (the caller
+      winner set between the count and the join-back (the caller
       unpersists ``stats['winners']`` once the result is materialized)."""
     cols = [
         F.col("repo"), F.col("path"), F.col("commit"), F.col("lang"),
@@ -133,7 +134,6 @@ def prepare_batch(batch: DataFrame, table: SnapshotTable,
     ]
     shaped = batch.select(*cols)
     resolved = resolve_lww(shaped, tuple(table.key_cols), "seq", "event_id",
-                           mode=lww_mode, salt=salt,
                            max_broadcast_keys=max_broadcast_keys, stats=stats,
                            group_expr=group_expr,
                            input_observation=input_observation,
@@ -148,129 +148,48 @@ def prepare_batch(batch: DataFrame, table: SnapshotTable,
     )
 
 
-def _column_all_null_per_footer(md, ci: int) -> bool:
-    """True iff every row group's stats PROVE column ``ci`` is entirely
-    null (null_count present and equal to num_values)."""
-    for rg in range(md.num_row_groups):
-        col = md.row_group(rg).column(ci)
-        st = col.statistics
-        if st is None or not st.has_null_count:
-            return False
-        if st.null_count != col.num_values:
-            return False
-    return True
-
-
-def _column_null_free_per_footer(md, ci: int) -> bool:
-    """True iff every row group's stats PROVE column ``ci`` has zero
-    nulls."""
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_null_count or st.null_count:
-            return False
-    return True
-
-
-def _scan_batch_footers(batch: DataFrame,
-                        key_cols: tuple[str, ...] = ()) -> dict | None:
-    """ONE driver-side pass over the batch files' parquet footers answering
-    every hot-path metadata question at once (each footer is opened a
-    single time per micro-batch):
-
-    - ``no_schema_events``: every file proves ``sc_col_name`` all-null
-      (null_count == num_values per row group) -> the batch provably holds
-      zero ``op='schema_change'`` rows (the scanned files are a superset of
-      the batch's rows, so absence in the files implies absence in the
-      batch, whatever slicing the caller applied).
-    - ``rows_total``: exact file row count (footer ``num_rows``) — a batch
-      count ONLY when the caller guarantees the batch is an unfiltered file
-      slice (a seq-sliced or stateful-dedup batch would overcount).
-    - ``keys_null_free``: every key column provably carries zero nulls.
-
-    Flags degrade INDEPENDENTLY (a missing sc stat doesn't forfeit the key
-    proof); None means the batch has no usable parquet file list at all.
-    Every proof errs toward False, so callers can only SKIP work when
-    provably safe."""
+def _footers_prove_no_schema_events(batch: DataFrame) -> bool:
+    """True iff the parquet footer of every batch file PROVES
+    ``sc_col_name`` all-null (null_count == num_values in every row group):
+    the batch then holds zero ``op='schema_change'`` rows (the files are a
+    superset of the batch's rows, so absence in the files implies absence
+    in the batch, whatever slicing the caller applied). Errs toward False,
+    so callers can only SKIP work when provably safe."""
     import pyarrow.parquet as pq
     from urllib.parse import unquote, urlparse
 
     try:
         files = batch.inputFiles()
     except Exception:
-        return None
+        return False
     if not files or not all(f.endswith(".parquet") for f in files):
-        return None
-    info = {"no_schema_events": True, "rows_total": 0, "keys_null_free": True}
+        return False
     for uri in files:
-        path = unquote(urlparse(uri).path) or uri
         try:
-            md = pq.ParquetFile(path).metadata
+            md = pq.ParquetFile(unquote(urlparse(uri).path) or uri).metadata
         except Exception:
-            return None
-        info["rows_total"] += md.num_rows
+            return False
         names = [md.schema.column(i).name for i in range(md.num_columns)]
-        if info["no_schema_events"]:
-            ci = names.index("sc_col_name") if "sc_col_name" in names else None
-            if ci is None or not _column_all_null_per_footer(md, ci):
-                info["no_schema_events"] = False
-        if info["keys_null_free"] and key_cols:
-            for k in key_cols:
-                if k not in names or not _column_null_free_per_footer(
-                        md, names.index(k)):
-                    info["keys_null_free"] = False
-                    break
-        if not key_cols:
-            info["keys_null_free"] = False
-    return info
+        if "sc_col_name" not in names:
+            return False
+        ci = names.index("sc_col_name")
+        for rg in range(md.num_row_groups):
+            col = md.row_group(rg).column(ci)
+            st = col.statistics
+            if (st is None or not st.has_null_count
+                    or st.null_count != col.num_values):
+                return False
+    return True
 
 
-def _footer_proves_no_schema_events(uri: str) -> bool:
-    """Single-file form of the ``no_schema_events`` proof (see
-    _scan_batch_footers); kept for targeted tests and ad-hoc callers."""
-    import pyarrow.parquet as pq
-    from urllib.parse import unquote, urlparse
-
-    path = unquote(urlparse(uri).path) or uri
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return False
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    if "sc_col_name" not in names:
-        return False
-    return _column_all_null_per_footer(md, names.index("sc_col_name"))
-
-
-def _footer_batch_counts(batch: DataFrame,
-                         key_cols: tuple[str, ...]) -> tuple[int, int] | None:
-    """(rows_total, rows_nullkey=0) when the footers prove null-free keys —
-    a thin view over _scan_batch_footers; None on any doubt. The CALLER
-    must guarantee the batch is an unfiltered file slice."""
-    info = _scan_batch_footers(batch, key_cols)
-    if info is None or not info["keys_null_free"]:
-        return None
-    return info["rows_total"], 0
-
-
-def collect_schema_events(batch: DataFrame,
-                          no_schema_proof: bool | None = None) -> list:
+def collect_schema_events(batch: DataFrame) -> list:
     """The batch's schema_change rows. Schema events are RARE (a handful
-    per 10^10-event log), so the hot path proves their ABSENCE from the
-    batch files' parquet footers alone and skips the per-batch scan job
-    entirely — on the vouched MoR trickle path this leaves the delta write
-    as the micro-batch's ONLY job. Sound in every dedup mode: the scanned
-    files are a superset of the batch's rows, so zero schema rows in the
-    files implies zero in the batch. Non-file sources (Kafka/socket),
-    non-parquet paths, or footers without null counts fall back to the
-    narrow pushed-down scan (4 columns, payload never read).
-
-    ``no_schema_proof``: the caller's already-computed proof (from
-    _scan_batch_footers — replay_batch opens each footer once for ALL its
-    metadata questions); None computes it here."""
-    if no_schema_proof is None:
-        info = _scan_batch_footers(batch)
-        no_schema_proof = bool(info and info["no_schema_events"])
-    if no_schema_proof:
+    per 10^10-event log), so the batch files' parquet footers first try to
+    prove their ABSENCE, which skips the scan job entirely. Non-file
+    sources (Kafka/socket, streaming micro-batches), non-parquet paths, or
+    footers without null counts fall back to the narrow pushed-down scan
+    (4 columns, payload never read)."""
+    if _footers_prove_no_schema_events(batch):
         return []
     return (
         batch.filter(F.col("op") == "schema_change")
@@ -285,13 +204,10 @@ def replay_batch(
     batch: DataFrame,
     stream_id: str,
     batch_id: int,
-    lww_mode: str = "maxseq",
-    salt: int = 16,
     collect_lineage: bool = True,
     cache_batch: bool = False,
     max_broadcast_keys: int | None = 5_000_000,
     merge_mode: str = "cow",
-    batch_is_file_slice: bool = False,
 ) -> dict[str, Any]:
     """Apply one micro-batch (data + schema_change rows mixed) exactly once.
 
@@ -304,23 +220,33 @@ def replay_batch(
 
     ``max_broadcast_keys``: live-key ceiling for the LWW winner broadcast
     (enforced inside resolve_lww as an exact post-aggregation count of the
-    winner set — no separate probe scan of the batch); above it the default
-    'maxseq' mode falls back to the shuffle join (a 5M winner set is ~500MB
-    as a hash relation — size to your executors).
+    winner set — no separate probe scan of the batch); above it the
+    join-back shuffles (a 5M winner set is ~500MB as a hash relation — size
+    to your executors). ``None`` forces the broadcast.
 
-    ``cache_batch``: False (batch replay over a static DataFrame) leaves the
-    batch uncached — each consumer (schema-event collect, the LWW winner
-    broadcast build, the wide probe) re-scans the parquet, which is cheap and
-    side-effect-free, and rows_seen is an extra ``batch.count()`` (a footer
-    metadata read for a whole-log batch; a narrow seq-column scan for a
-    seq-sliced chunk). True (streaming foreachBatch): the batch is
-    ``persist()``ed and materialized ONCE — a micro-batch's lineage contains
-    the STATEFUL dedup operator, and every extra evaluation (a count, the
-    broadcast build, the probe branch) would re-execute it against
-    already-committed state with no guarantee of stability. Micro-batches
-    are small; materializing them is the documented foreachBatch practice.
-    (A per-row observe() was used for rows_seen before — measured ~34% of
-    wall at 21.6M events; footer counts + cached counts are free.)"""
+    Metrics come from one of two paths, neither of which scans the batch
+    for them:
+
+    - COUNTED (the default): the winner aggregation is persisted and
+      counted in ONE job that answers rows_seen, rows_resolved, null-key
+      rows and groups, per-bucket lineage, and the merge's affected-bucket
+      set (``source_buckets``); the join-back reuses the cached winners.
+    - OBSERVED: ``max_broadcast_keys=None`` + ``merge_mode='mor'``. No job
+      beyond the delta write: rows_seen and null-key rows ride an
+      Observation on the winner aggregation's input inside that job,
+      rows_resolved is the delta write's own rows_written, and lineage
+      comes from the written files' footers. This is the streaming trickle
+      path; the caller vouches that a micro-batch's winner set fits the
+      executors (bounded triggers do).
+
+    ``cache_batch``: False (batch replay over a static DataFrame, or a
+    deterministic file-slice micro-batch) leaves the batch uncached — each
+    consumer (schema-event collect, the winner aggregation, the wide probe)
+    re-scans the parquet, which is cheap and side-effect-free. True
+    (streaming foreachBatch over a stateful dedup): the batch is
+    ``persist()``ed and materialized ONCE — its lineage contains the
+    STATEFUL dedup operator, and every extra evaluation would re-execute it
+    against already-committed state with no guarantee of stability."""
     m = table.manifest()
     last = m["commits"].get(stream_id)
     if last is not None and batch_id <= last:
@@ -329,24 +255,14 @@ def replay_batch(
     if cache_batch:
         batch = batch.persist()
     try:
-        # schema_change rows are rare and tiny — the footer fast path skips
-        # even the scan when the batch files provably hold none (see
-        # collect_schema_events); otherwise one narrow pushed-down scan
-        # (4 columns; the content payload is never read). The whole-batch
-        # row count no longer needs its own pass: it rides the LWW guard
-        # job below (sum of per-key counts). Evolution is ORDER-INDEPENDENT
-        # (virtual columns guarded by add_seq, see
-        # SnapshotTable.evolve_column), so no seq-epoch splitting is needed:
-        # apply the metadata commits, then merge the whole batch at once.
-        # (A persisted streaming micro-batch is materialized by whichever
-        # action runs first — this collect when it runs, else the merge.)
-        # One footer pass serves every metadata question this batch asks
-        # (schema-event proof here, row/null-key counts below).
-        finfo = _scan_batch_footers(batch, tuple(table.key_cols))
-        sc = collect_schema_events(
-            batch,
-            no_schema_proof=bool(finfo and finfo["no_schema_events"]),
-        )
+        # schema_change rows are rare and tiny — the footer proof skips even
+        # the scan when the batch files provably hold none (see
+        # collect_schema_events); otherwise one narrow pushed-down scan.
+        # Evolution is ORDER-INDEPENDENT (virtual columns guarded by
+        # add_seq, see SnapshotTable.evolve_column), so no seq-epoch
+        # splitting is needed: apply the metadata commits, then merge the
+        # whole batch at once.
+        sc = collect_schema_events(batch)
         for r in sorted(sc, key=lambda r: int(r["seq"] or 0)):
             table.evolve_column(
                 r["sc_col_name"], r["sc_col_type"], int(r["seq"] or 0)
@@ -356,125 +272,34 @@ def replay_batch(
         # LOG_SCHEMA allows NULL seq (external/wire producers): the engine
         # contract defines it as seq 0 — the earliest possible writer, losing
         # to any real seq, ties broken by event_id. Normalizing at THIS
-        # single funnel point keeps every lww mode, the seq-guarded MERGE,
-        # and the pandas oracle (reduce_log fillna(0)) in agreement.
+        # single funnel point keeps the resolver, the seq-guarded MERGE, and
+        # the pandas oracle (reduce_log fillna(0)) in agreement.
         data = data.withColumn(
             "seq", F.coalesce(F.col("seq"), F.lit(0).cast("long"))
         )
-        # Two metric regimes, both zero-extra-scan:
-        # - GUARDED (max_broadcast_keys set, the default): the broadcast-OOM
-        #   guard folds into resolve_lww's winner aggregation — the winner
-        #   set is persisted via `lww_stats`, counted exactly post-agg, and
-        #   reused by the join-back. ``group_expr`` makes that SAME guard job
-        #   return per-bucket winner counts serving three masters: the
-        #   rows_seen/rows_resolved metrics, per-bucket lineage (T6), and
-        #   the merge's affected-bucket set (the CoW probe job disappears on
-        #   tables without file stats).
-        # - VOUCHED (max_broadcast_keys=None) + merge_mode='mor': the
-        #   streaming trickle fast path — NO guard job at all. rows_seen
-        #   rides an Observation on the winner aggregation's input inside
-        #   the delta-write job, rows_resolved IS the delta write's own
-        #   rows_written (winners only reach the delta), and lineage comes
-        #   from the written files' parquet footers (driver-side metadata
-        #   reads, no job). One Spark job per micro-batch beyond the
-        #   schema-event scan. The caller vouches that a micro-batch's
-        #   winner set fits the executors (bounded triggers do).
-        # whether a given lww mode actually wires the observation into the
-        # plan is resolve_lww's knowledge, not ours: offer it the
-        # observation and let stats['input_observed'] report back — a mode
-        # that ignores it (agg / salted_window) keeps the counted fallback
-        # path below instead of blocking forever on Observation.get
-        want_vouch = max_broadcast_keys is None and merge_mode == "mor"
-        # footer fast path for the vouched metrics: when the caller declares
-        # the batch IS its parquet files (``batch_is_file_slice`` — the
-        # guard-mode streaming source) and the footers prove null-free keys,
-        # rows_seen/rows_nullkey come from driver-side metadata and the
-        # interpreted observe() pass disappears from the delta-write job
-        # entirely. The footer total counts schema_change rows too — len(sc)
-        # is subtracted below.
-        footer_counts = (
-            (finfo["rows_total"], 0)
-            if want_vouch and batch_is_file_slice
-            and finfo is not None and finfo["keys_null_free"]
-            else None
-        )
-        obs_in = None
-        if want_vouch and footer_counts is None:
-            from pyspark.sql import Observation
-            import uuid as _uuid
-            obs_in = Observation(f"lww-in-{_uuid.uuid4().hex[:8]}")
+        observed = max_broadcast_keys is None and merge_mode == "mor"
+        obs = Observation(f"lww-in-{uuid.uuid4().hex[:8]}") if observed else None
         lww_stats: dict[str, Any] = {}
-        resolved = prepare_batch(data, table, lww_mode=lww_mode, salt=salt,
+        resolved = prepare_batch(data, table,
                                  max_broadcast_keys=max_broadcast_keys,
-                                 stats=lww_stats,
-                                 group_expr=(None if want_vouch
+                                 stats=None if observed else lww_stats,
+                                 group_expr=(None if observed
                                              else table.bucket_expr()),
-                                 input_observation=obs_in,
-                                 # the MoR sink re-resolves the SAME
-                                 # (seq, tie) winner rule at read/fold time,
-                                 # so the per-batch residual tie-dedup
-                                 # aggregation is redundant there — skip its
-                                 # shuffle (see resolve_lww)
-                                 exact_one_per_key=not want_vouch)
-        vouched_mor = want_vouch and (
-            lww_stats.get("input_observed", False)
-            or (footer_counts is not None
-                and lww_stats.get("lww_mode") in ("maxseq", "maxseq_shuffle"))
-        )
-        # Guarded path: the resolved batch feeds multiple consumers (bucket
+                                 input_observation=obs,
+                                 # the MoR sink re-resolves with the SAME
+                                 # winner rule at read/fold time, so the
+                                 # per-batch residual tie reduction is
+                                 # redundant there — skip its shuffle
+                                 exact_one_per_key=not observed)
+        # Counted path: the resolved batch feeds multiple consumers (bucket
         # pruning and the merge join) — cache it so LWW runs once per batch.
-        # Vouched MoR path: exactly ONE consumer (the delta write); caching
+        # Observed path: exactly ONE consumer (the delta write); caching
         # would only add a store-and-reload of the winner set.
-        if not vouched_mor:
+        if not observed:
             resolved = resolved.persist()
         try:
-            groups = None
-            lineage = None
-            if not vouched_mor:
-                if "n_keys" in lww_stats:
-                    # the winner aggregation's guard already counted the
-                    # resolved rows EXACTLY (one NON-NULL-key winner survives
-                    # the join-back per group), so a second count job per
-                    # batch is pure overhead; the merge's first action
-                    # materializes the resolved cache instead, and the
-                    # winner-set cache stays pinned until then (released in
-                    # the finally below).
-                    rows_resolved = lww_stats["n_keys"]
-                    rows_seen = lww_stats["rows_total"]
-                else:
-                    # modes without the guard count (agg / salted_window /
-                    # explicit shuffle): materialize + count here; winners
-                    # only, so this count is cheap — plus one narrow count
-                    # for the batch total. The count must EXCLUDE null-key
-                    # winner rows: merge() filters them out before writing,
-                    # so counting them would overstate rows_resolved — and
-                    # they must surface in metrics, not vanish (same
-                    # contract the guarded path keeps via null_key_groups).
-                    nk = None
-                    for k in table.key_cols:
-                        c = F.col(k).isNull()
-                        nk = c if nk is None else (nk | c)
-                    r0 = resolved.select(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.when(nk, 1).otherwise(0)).alias("nk"),
-                    ).first()
-                    null_groups = int(r0["nk"] or 0)
-                    rows_resolved = int(r0["n"]) - null_groups
-                    if null_groups:
-                        lww_stats["null_key_groups"] = null_groups
-                    rows_seen = data.count()
-                    if "winners" in lww_stats:
-                        lww_stats["winners"].unpersist()
-                groups = lww_stats.get("groups")
-                if collect_lineage:
-                    if groups is not None:
-                        lineage = dict(groups)  # free: folded into the guard job
-                    else:
-                        lineage = {
-                            str(r["_b"]): r["n"]
-                            for r in resolved.groupBy(table.bucket_expr().alias("_b"))
-                            .agg(F.count(F.lit(1)).alias("n")).collect()
-                        }
+            groups = lww_stats.get("groups")
+            lineage = dict(groups) if collect_lineage and groups else None
             metrics: dict[str, Any] = {"batch_id": batch_id, "schema_changes": len(sc)}
             metrics.update(
                 table.merge(
@@ -483,61 +308,49 @@ def replay_batch(
                     merge_mode=merge_mode,
                     # sound because LOG_SCHEMA key types == target key types
                     # (strings), so merge's conform-cast cannot move a row
-                    # to a different bucket than the guard job hashed it to
+                    # to a different bucket than the count job hashed it to
                     source_buckets=(
                         sorted(int(b) for b in groups) if groups is not None else None
                     ),
                 )
             )
-            if vouched_mor:
+            if observed:
                 if metrics.get("skipped_replay"):
-                    # no write action ran -> the observation never fired;
-                    # reading it would block forever (unreachable today:
-                    # replay_batch's own marker check precedes this, but a
-                    # concurrent writer could land a commit in between)
+                    # no write action ran, so the observation never fired;
+                    # reading it would block forever (a concurrent writer
+                    # can land the commit after the marker check above)
                     return metrics
-                # the delta write was the one action that evaluated the
-                # batch: row counts come from the source files' parquet
-                # footers when provable (zero extra work in the job), else
-                # from the input observation; rows_written IS the delta row
-                # count (winners, PLUS residual same-seq ties/redeliveries —
-                # the per-batch tie-dedup is skipped because the MoR
-                # read/fold resolution applies the identical winner rule,
-                # see exact_one_per_key above), and the manifest already
-                # holds the footer-derived per-bucket lineage (_merge_delta
-                # records it for every MoR commit)
-                if footer_counts is not None:
-                    rows_seen = footer_counts[0] - len(sc)
-                    nullkey = footer_counts[1]
-                else:
-                    om = dict(obs_in.get)
-                    rows_seen = int(om.get("rows_total") or 0)
-                    nullkey = int(om.get("rows_nullkey") or 0)
+                # the delta row count keeps winner redeliveries and
+                # equal-seq ties (exact_one_per_key=False — they collapse at
+                # read/fold), so there rows_superseded_or_duplicate is a
+                # LOWER bound on the true duplicate count;
+                # rows_resolved_exact marks which accounting a batch
+                # carries. (_merge_delta records the footer-derived
+                # per-bucket lineage for every MoR commit.)
+                om = obs.get
+                rows_seen = int(om.get("rows_total") or 0)
                 rows_resolved = int(metrics.get("rows_written") or 0)
-                if nullkey:
-                    metrics["rows_nullkey_dropped"] = nullkey
+                if om.get("rows_nullkey"):
+                    metrics["rows_nullkey_dropped"] = int(om["rows_nullkey"])
+            else:
+                rows_seen = lww_stats["rows_total"]
+                rows_resolved = lww_stats["n_keys"]
+                # null-key rows are unmergeable: the join-back drops them,
+                # but never silently
+                if lww_stats["null_key_groups"]:
+                    metrics["rows_nullkey_dropped"] = lww_stats["null_key_rows"]
+                    metrics["rows_nullkey_dropped_groups"] = lww_stats["null_key_groups"]
+                metrics["lww_keys"] = lww_stats["n_keys"]
+                metrics["lww_join_back"] = lww_stats["join_back"]
             metrics["rows_seen"] = rows_seen
             metrics["rows_resolved"] = rows_resolved
-            # duplicates + LWW-superseded rows per batch (reference T2/A14);
-            # includes any null-key rows (unmergeable — dropped, but never
-            # silently: surfaced below). On the vouched MoR path
-            # rows_resolved is the DELTA row count, which keeps winner
-            # redeliveries and equal-seq ties (exact_one_per_key=False —
-            # they collapse at read/fold), so there it can exceed the
-            # unique-winner count and this difference is a LOWER bound on
-            # the true duplicate count; rows_resolved_exact marks which
-            # accounting a batch carries.
+            # duplicates + LWW-superseded rows per batch (reference T2/A14),
+            # null-key rows included
             metrics["rows_superseded_or_duplicate"] = max(0, rows_seen - rows_resolved)
-            metrics["rows_resolved_exact"] = not vouched_mor
-            if lww_stats.get("null_key_groups"):
-                metrics["rows_nullkey_dropped_groups"] = lww_stats["null_key_groups"]
-            if "n_keys" in lww_stats:
-                metrics["lww_keys"] = lww_stats["n_keys"]
-                metrics["lww_mode"] = lww_stats["lww_mode"]
+            metrics["rows_resolved_exact"] = not observed
         finally:
-            if not vouched_mor:
+            if not observed:
                 resolved.unpersist()
-            if "winners" in lww_stats:  # no-op if already released above
                 lww_stats["winners"].unpersist()
         return metrics
     finally:
@@ -551,8 +364,6 @@ def replay_log(
     log_dir: str,
     stream_id: str = "batch-replay",
     n_batches: int = 1,
-    lww_mode: str = "maxseq",
-    salt: int = 16,
     collect_lineage: bool = True,
     merge_mode: str = "cow",
     compact_every: int | None = None,
@@ -572,7 +383,6 @@ def replay_log(
     if n_batches <= 1:
         result.batches.append(
             replay_batch(spark, table, log, stream_id, 0,
-                         lww_mode=lww_mode, salt=salt,
                          collect_lineage=collect_lineage, merge_mode=merge_mode)
         )
         _maybe_compact(spark, table, merge_mode, compact_every, done=1)
@@ -582,7 +392,6 @@ def replay_log(
     if lo is None:  # empty log: nothing to chunk (single-batch path handles it)
         result.batches.append(
             replay_batch(spark, table, log, stream_id, 0,
-                         lww_mode=lww_mode, salt=salt,
                          collect_lineage=collect_lineage, merge_mode=merge_mode)
         )
         # the 'once at the end' fold contract must hold on this path too —
@@ -603,7 +412,6 @@ def replay_log(
         chunk = log.filter(cond)
         result.batches.append(
             replay_batch(spark, table, chunk, stream_id, b,
-                         lww_mode=lww_mode, salt=salt,
                          collect_lineage=collect_lineage, merge_mode=merge_mode)
         )
         _maybe_compact(spark, table, merge_mode, compact_every, done=b + 1,

@@ -53,7 +53,7 @@ def cmd_replay(spark, args) -> None:
 
     t = _table(args)
     res = replay_log(spark, t, args.log, n_batches=args.batches,
-                     lww_mode=args.lww_mode, merge_mode=args.merge_mode,
+                     merge_mode=args.merge_mode,
                      compact_every=args.compact_every)
     print(json.dumps({"rows_applied": res.rows_applied,
                       "batches": len(res.batches),
@@ -64,7 +64,6 @@ def cmd_stream(spark, args) -> None:
     from nostr_data_pipeline_spark.streaming.replayer import StreamingReplayer
 
     rep = StreamingReplayer(_table(args), args.log, args.checkpoint,
-                            lww_mode=args.lww_mode,
                             merge_mode=args.merge_mode,
                             compact_every=args.compact_every,
                             max_broadcast_keys=(None if args.vouch_broadcast
@@ -270,7 +269,6 @@ def main(argv=None) -> int:
     sp = sub.add_parser("replay"); common(sp)
     sp.add_argument("--log", required=True)
     sp.add_argument("--batches", type=int, default=1)
-    sp.add_argument("--lww-mode", default="maxseq")
     sp.add_argument("--merge-mode", default="cow", choices=("cow", "mor"),
                     dest="merge_mode")
     sp.add_argument("--compact-every", type=int, default=None,
@@ -278,15 +276,14 @@ def main(argv=None) -> int:
     sp = sub.add_parser("stream"); common(sp)
     sp.add_argument("--log", required=True)
     sp.add_argument("--checkpoint", required=True)
-    sp.add_argument("--lww-mode", default="maxseq")
     sp.add_argument("--merge-mode", default="cow", choices=("cow", "mor"),
                     dest="merge_mode")
     sp.add_argument("--compact-every", type=int, default=None,
                     dest="compact_every")
     sp.add_argument("--vouch-broadcast", action="store_true",
                     dest="vouch_broadcast",
-                    help="micro-batches are trigger-bounded: skip the LWW "
-                         "guard job (with --merge-mode mor this is the "
+                    help="micro-batches are trigger-bounded: force the LWW "
+                         "winner broadcast (with --merge-mode mor this is the "
                          "one-job-per-batch trickle fast path)")
     sp = sub.add_parser("stats"); common(sp)
     sp = sub.add_parser("trending"); common(sp)

@@ -185,11 +185,11 @@ FROM (
 
 def w3_lww_state(spark, sf_dir):
     """W3 (north-rule core shape): last-writer-wins final state per key using
-    the engine's resolver (max_by partial agg — skew-safe, no window sort)."""
-    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
+    the engine's winner rule (one max_by partial agg — no window sort)."""
+    from nostr_data_pipeline_spark.cdc.lww import lww_reduce
 
     e = load(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type", "value")
-    res = resolve_lww(e, ("user_id",), seq_col="ts", tie_col="event_id", mode="agg")
+    res = lww_reduce(e, ("user_id",), seq_col="ts", tie_col="event_id")
     return res.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),

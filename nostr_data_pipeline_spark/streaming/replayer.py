@@ -79,8 +79,6 @@ class StreamingReplayer:
         stream_id: str = "stream-replay",
         lateness: str = "10 minutes",
         max_files_per_trigger: int | None = None,
-        lww_mode: str = "maxseq",
-        salt: int = 16,
         collect_lineage: bool = True,
         dedup_mode: str = "guard",
         source_factory: Callable[[SparkSession], DataFrame] | None = None,
@@ -125,8 +123,8 @@ class StreamingReplayer:
         micro-batch's winner set fits the executors — sound when the trigger
         bounds batch size (maxFilesPerTrigger / maxOffsetsPerTrigger) — and,
         combined with ``merge_mode='mor'``, enables the one-job-per-batch
-        trickle fast path: no guard job, metrics ride the delta write's own
-        observation and the written files' parquet footers (see
+        trickle fast path: no count job, the metrics ride the delta write's
+        own observation and the written files' parquet footers (see
         replay_batch). This is the recommended steady-state CDC ingest
         configuration."""
         if dedup_mode not in ("guard", "watermark"):
@@ -137,8 +135,6 @@ class StreamingReplayer:
         self.stream_id = stream_id
         self.lateness = lateness
         self.max_files_per_trigger = max_files_per_trigger
-        self.lww_mode = lww_mode
-        self.salt = salt
         self.collect_lineage = collect_lineage
         self.dedup_mode = dedup_mode
         self.source_factory = source_factory
@@ -171,8 +167,6 @@ class StreamingReplayer:
             batch,
             stream_id=self.stream_id,
             batch_id=batch_id,
-            lww_mode=self.lww_mode,
-            salt=self.salt,
             collect_lineage=self.collect_lineage,
             # materialize the micro-batch once ONLY when its lineage contains
             # the stateful dedup operator (dedup_mode='watermark'), which
@@ -183,12 +177,6 @@ class StreamingReplayer:
             cache_batch=(self.dedup_mode == "watermark"),
             merge_mode=self.merge_mode,
             max_broadcast_keys=self.max_broadcast_keys,
-            # guard-mode micro-batches from the default file source ARE
-            # their parquet files (no stateful operator, no filter), which
-            # licenses the footer-metadata metrics fast path; a watermark
-            # batch or a factory source (Kafka/socket) is not
-            batch_is_file_slice=(self.dedup_mode == "guard"
-                                 and self.source_factory is None),
         )
         self._applied_batches += 1
         if self.merge_mode == "mor" and self.compact_every:

@@ -63,6 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nostr_data_pipeline_spark.cdc.lww import lww_reduce
+
 _WIDEN_OK = {
     ("integer", "long"), ("integer", "double"), ("long", "double"),
     ("float", "double"), ("integer", "integer"), ("long", "long"),
@@ -603,27 +605,6 @@ class SnapshotTable:
     def _deltas_of(m: dict[str, Any]) -> dict[str, list[str]]:
         return m.get("deltas") or {}
 
-    def _resolve_lww_rows(self, df: DataFrame, seq_col: str,
-                          tie_col: str) -> DataFrame:
-        """Collapse base + delta rows of a merge-on-read table to the per-key
-        ``(seq, tie)``-max winner — the read-side half of the MoR contract
-        (same winner rule as the write-side MERGE, so CoW and MoR commits
-        interleave soundly). One hash-partitioned ``max_by(struct)``
-        aggregation per read; the read amplification is proportional to the
-        UNCOMPACTED delta volume, which ``compact()`` folds back to zero —
-        the LSM read/write trade, chosen per merge call."""
-        cols = list(df.columns)
-        payload = [c for c in cols if c not in self.key_cols]
-        win = F.max_by(
-            F.struct(*[F.col(c) for c in payload]),
-            F.struct(F.col(seq_col), F.col(tie_col)),
-        ).alias("_w")
-        out = df.groupBy(*self.key_cols).agg(win)
-        return out.select(
-            *[F.col(c) if c in self.key_cols else F.col(f"_w.{c}").alias(c)
-              for c in cols]
-        )
-
     def _resolution_cols(self, m: dict[str, Any]) -> tuple[str, str]:
         lww = m.get("delta_lww") or {}
         return lww.get("seq_col", "last_seq"), lww.get("tie_col", "last_event_id")
@@ -684,12 +665,12 @@ class SnapshotTable:
                 delta_bytes = ceiling + 1  # unknown: no bcast
                 break
         if delta_bytes > ceiling:
-            return self._resolve_lww_rows(base.unionByName(delta), rs, rt)
+            return lww_reduce(base.unionByName(delta), self.key_cols, rs, rt)
         keys = list(self.key_cols)
         dkeys = delta.select(*keys).distinct()
         untouched = base.join(F.broadcast(dkeys), keys, "left_anti")
         touched = base.join(F.broadcast(dkeys), keys, "left_semi")
-        resolved = self._resolve_lww_rows(touched.unionByName(delta), rs, rt)
+        resolved = lww_reduce(touched.unionByName(delta), self.key_cols, rs, rt)
         return untouched.unionByName(resolved)
 
     @staticmethod
@@ -2233,7 +2214,7 @@ class SnapshotTable:
         folding = any(deltas.get(str(b)) for b in affected)
         if folding:
             rs, rt = self._resolution_cols(m)
-            df = self._resolve_lww_rows(df, rs, rt)
+            df = lww_reduce(df, self.key_cols, rs, rt)
         df = df.withColumn("_bucket", self.bucket_expr())
         new_version = m["version"] + 1
         data_rel = f"data-v{new_version:08d}"
@@ -2306,7 +2287,7 @@ class SnapshotTable:
             # buckets; fold them into the rewrite instead (resolved here,
             # cleared in the commit below)
             rs, rt = self._resolution_cols(m)
-            df = self._resolve_lww_rows(df, rs, rt)
+            df = lww_reduce(df, self.key_cols, rs, rt)
         old_n, old_tfr = self.num_buckets, self.target_file_rows
         self.num_buckets = n
         if target_file_rows is not None:

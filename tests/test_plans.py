@@ -69,19 +69,14 @@ def test_cdc_prepare_uses_arrow_udf_only(spark, tmp_path):
     log = spark.read.schema(LOG_SCHEMA).parquet(d)
     data = log.filter("op != 'schema_change'")
 
-    # mode='agg': the wide payload crosses exactly one shuffle
-    plan = plan_of(prepare_batch(data, t, lww_mode="agg"))
+    # the winner-seq pass must be a pruned-scan HashAggregate — content
+    # never read on that side — and the winner set joins back as a
+    # BROADCAST, so the wide payload is filtered map-side and crosses NO
+    # wide shuffle (the only Exchange left is the tiny residual tie-resolve
+    # over ~one row per key)
+    plan = plan_of(prepare_batch(data, t))
     assert "ArrowEvalPython" in plan      # vectorized pandas UDF
     assert "BatchEvalPython" not in plan  # never per-row Python
-    assert plan.count("Exchange") == 1, "agg LWW should shuffle exactly once"
-
-    # mode='maxseq' (default): the winner-seq pass must be a pruned-scan
-    # HashAggregate — content never read on that side — and the winner set
-    # joins back as a BROADCAST, so the wide payload is filtered map-side
-    # and crosses NO wide shuffle (the only Exchange left is the tiny
-    # residual tie-resolve over ~one row per key)
-    plan = plan_of(prepare_batch(data, t, lww_mode="maxseq"))
-    assert "BatchEvalPython" not in plan
     assert "HashAggregate" in plan and "partial_max(seq" in plan
     assert "BroadcastHashJoin" in plan, "winner join-back must broadcast"
     pruned_scans = [
@@ -112,10 +107,10 @@ def test_lww_guard_folds_into_winner_agg(spark, tmp_path):
     data = spark.read.schema(LOG_SCHEMA).parquet(d).filter("op != 'schema_change'")
 
     stats: dict = {}
-    resolved = prepare_batch(data, t, lww_mode="maxseq", stats=stats)
+    resolved = prepare_batch(data, t, stats=stats)
     try:
         plan = plan_of(resolved)
-        assert stats["lww_mode"] == "maxseq" and stats["n_keys"] == 25
+        assert stats["join_back"] == "broadcast" and stats["n_keys"] == 25
         # winner side comes from cache, not a second parquet read
         assert "InMemoryTableScan" in plan
         # the text after InMemoryRelation is the *description* of the
@@ -132,9 +127,9 @@ def test_lww_guard_folds_into_winner_agg(spark, tmp_path):
     shaped = data.select("repo", "path", "seq", "event_id", "content")
     stats2: dict = {}
     out = resolve_lww(shaped, ("repo", "path"), "seq", "event_id",
-                      mode="maxseq", max_broadcast_keys=1, stats=stats2)
+                      max_broadcast_keys=1, stats=stats2)
     try:
-        assert stats2["lww_mode"] == "maxseq_shuffle"
+        assert stats2["join_back"] == "shuffle"
         # the FORCED hint must be gone — broadcast is now Spark's own
         # autoBroadcastJoinThreshold decision (which respects the 8GB cap),
         # so an over-ceiling winner set can no longer OOM the executors
@@ -157,7 +152,7 @@ def test_resolve_lww_composes_into_streaming_plans(spark, tmp_path):
     write_log(d, LogSpec(n_events=200, n_repos=3, paths_per_repo=3, seed=2, n_files=1))
     stream = spark.readStream.schema(LOG_SCHEMA).parquet(d)
     narrow = stream.select("repo", "path", "seq", "event_id", "content")
-    out = resolve_lww(narrow, ("repo", "path"), "seq", "event_id", mode="maxseq")
+    out = resolve_lww(narrow, ("repo", "path"), "seq", "event_id")
     assert out.isStreaming  # plan built lazily, no eager count crash
     # guard armed (default ceiling) -> no broadcast hint in the unbounded
     # plan; an OOM-sized winner set can't be forced onto executors (a
@@ -166,7 +161,7 @@ def test_resolve_lww_composes_into_streaming_plans(spark, tmp_path):
     assert "strategy=broadcast" not in out._jdf.queryExecution().analyzed().toString()
     # explicit vouch (ceiling=None) restores the forced broadcast
     vouched = resolve_lww(narrow, ("repo", "path"), "seq", "event_id",
-                          mode="maxseq", max_broadcast_keys=None)
+                          max_broadcast_keys=None)
     assert "strategy=broadcast" in vouched._jdf.queryExecution().analyzed().toString()
 
 

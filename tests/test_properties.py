@@ -1,5 +1,6 @@
 """Property-based invariants (hypothesis): random small logs must always
-match the pandas oracle, and LWW modes must agree with each other."""
+match the pandas oracle, and the LWW formulations must agree with each
+other."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from nostr_data_pipeline_spark.cdc.generator import LogSpec, make_log_frame, write_log
-from nostr_data_pipeline_spark.cdc.lww import resolve_lww
+from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
 from nostr_data_pipeline_spark.cdc.oracle import reduce_log
 from nostr_data_pipeline_spark.cdc.replayer import replay_log
 from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
@@ -47,6 +48,8 @@ def test_random_log_replay_matches_oracle(spark, tmp_path_factory, spec, n_batch
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(spec=spec_strategy)
 def test_lww_modes_agree(spark, spec):
+    """The resolver's broadcast and shuffle join-backs and the one-pass
+    winner rule (``lww_reduce``) pick the same winner per key."""
     log = make_log_frame(spec)
     data = log[log["op"] != "schema_change"][
         ["repo", "path", "seq", "event_id", "commit", "content"]
@@ -54,18 +57,21 @@ def test_lww_modes_agree(spark, spec):
     if data.empty:
         return
     df = spark.createDataFrame(data)
-    outs = {}
-    for mode in ("maxseq", "maxseq_shuffle", "agg", "salted_window"):
-        outs[mode] = (
-            resolve_lww(df, ("repo", "path"), "seq", "event_id", mode=mode)
-            .toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+    keys = ("repo", "path")
+    outs = {
+        name: out.toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+        for name, out in (
+            ("broadcast", resolve_lww(df, keys, max_broadcast_keys=None)),
+            ("shuffle", resolve_lww(df, keys, max_broadcast_keys=1)),
+            ("lww_reduce", lww_reduce(df, keys, "seq", "event_id")),
         )
-    base = outs["maxseq"]
-    for mode in ("maxseq_shuffle", "agg", "salted_window"):
+    }
+    base = outs["broadcast"]
+    for name in ("shuffle", "lww_reduce"):
         pd.testing.assert_frame_equal(
             base[["repo", "path", "seq", "event_id"]],
-            outs[mode][["repo", "path", "seq", "event_id"]],
-            check_dtype=False, obj=mode,
+            outs[name][["repo", "path", "seq", "event_id"]],
+            check_dtype=False, obj=name,
         )
 
 

@@ -8,9 +8,12 @@ and schema-change events.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 import pytest
 
+from nostr_data_pipeline_spark.cdc import replayer
 from nostr_data_pipeline_spark.cdc.generator import LogSpec, make_log_frame, write_log
 from nostr_data_pipeline_spark.cdc.oracle import reduce_log
 from nostr_data_pipeline_spark.cdc.replayer import replay_log
@@ -53,14 +56,51 @@ def _check_final_state(spark, table: SnapshotTable, expected: pd.DataFrame):
         )
 
 
+# Differential config matrix: the same log replayed under every config that
+# selects a different plan or metrics path must land on the oracle state.
+# "maxseq" is the default (counted metrics path, broadcast join-back).
+MATRIX = {
+    "maxseq": {},
+    # above the winner-count ceiling the join-back shuffles
+    "maxseq_shuffle": {"max_broadcast_keys": 1},
+    "aqe_off": {},
+    # merge-on-read with a forced broadcast: the observed metrics path
+    "mor_observed": {"merge_mode": "mor", "max_broadcast_keys": None},
+    # merge-on-read under the default ceiling: counted path
+    "mor_counted": {"merge_mode": "mor"},
+}
+
+
 @pytest.mark.parametrize(
-    "n_batches,lww_mode",
-    [(1, "agg"), (5, "agg"), (3, "salted_window"), (2, "maxseq"), (2, "maxseq_shuffle")],
+    "n_batches,config",
+    [(2, "maxseq"), (2, "maxseq_shuffle"), (3, "aqe_off"), (2, "mor_observed"),
+     (1, "mor_counted")],
 )
-def test_replay_matches_oracle(spark, log_dir, expected, tmp_path, n_batches, lww_mode):
+def test_replay_matches_oracle(spark, log_dir, expected, tmp_path, monkeypatch,
+                               n_batches, config):
     table = SnapshotTable(str(tmp_path / "tbl"), num_buckets=8)
-    result = replay_log(spark, table, log_dir, n_batches=n_batches, lww_mode=lww_mode)
-    assert result.rows_applied > 0
+    kw = dict(MATRIX[config])
+    # replay_log forwards merge_mode itself; the rest rides the patch
+    merge_mode = kw.pop("merge_mode", "cow")
+    monkeypatch.setattr(replayer, "replay_batch",
+                        partial(replayer.replay_batch, **kw))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    if config == "aqe_off":
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        batches = replay_log(spark, table, log_dir, n_batches=n_batches,
+                             merge_mode=merge_mode).batches
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    frame = make_log_frame(SPEC)
+    assert len(batches) == n_batches
+    assert sum(b["rows_seen"] for b in batches) == \
+        (frame["op"] != "schema_change").sum()
+    observed = config == "mor_observed"
+    assert all(b["rows_resolved_exact"] is not observed for b in batches)
+    if not observed:
+        join_back = "shuffle" if config == "maxseq_shuffle" else "broadcast"
+        assert all(b["lww_join_back"] == join_back for b in batches)
     _check_final_state(spark, table, expected)
 
 
@@ -275,11 +315,11 @@ def test_null_key_rows_surfaced_not_silent(spark, tmp_path):
     assert t2.read(spark).count() == 2
 
 
-def test_vouched_request_with_non_maxseq_mode_falls_back(spark, tmp_path):
-    """Only the maxseq family wires ``input_observation`` into the plan
-    (cdc/lww.py); a vouched call (ceiling=None + mor) under 'agg' or
-    'salted_window' must therefore take the counted fallback path — the
-    Observation would never fire and reading it would block forever."""
+def test_agg_mode_null_key_metrics(spark, tmp_path):
+    """A forced broadcast under CoW (the batch the deleted agg/salted
+    counted fallback used to take) must still EXCLUDE null-key winners from
+    rows_resolved and surface the drop: the null-key group is counted
+    before the null-unsafe join-back drops it."""
     import pandas as pd
 
     from nostr_data_pipeline_spark.cdc.replayer import (
@@ -290,8 +330,8 @@ def test_vouched_request_with_non_maxseq_mode_falls_back(spark, tmp_path):
         "event_id": ["e1", "e2", "e3"],
         "seq": pd.array([1, 2, 3], dtype="int64"),
         "op": ["upsert"] * 3,
-        "repo": ["r1", "r2", "r1"],
-        "path": ["a", "b", "a"],
+        "repo": ["r1", None, "r1"],
+        "path": ["a", "b", "c"],
         "ts": pd.to_datetime(["2024-01-01"] * 3),
         "commit": ["c"] * 3, "lang": ["py"] * 3,
         "content": ["x", "y", "z"],
@@ -299,17 +339,13 @@ def test_vouched_request_with_non_maxseq_mode_falls_back(spark, tmp_path):
         "sc_col_name": [None] * 3, "sc_col_type": [None] * 3,
     })
     batch = spark.createDataFrame(rows, LOG_SCHEMA)
-
-    for i, mode in enumerate(("agg", "salted_window")):
-        t = SnapshotTable(str(tmp_path / f"t{mode}"), num_buckets=4)
-        t.create(TARGET_BASE_SCHEMA)
-        m = replay_batch(spark, t, batch, "s", 0, lww_mode=mode,
-                         merge_mode="mor", max_broadcast_keys=None)
-        assert m["rows_resolved"] == 2 and m["rows_seen"] == 3
-        t.fold_deltas(spark)
-        got = {(r["repo"], r["path"]): r["content"]
-               for r in t.read(spark).collect()}
-        assert got == {("r1", "a"): "z", ("r2", "b"): "y"}
+    t = SnapshotTable(str(tmp_path / "t"), num_buckets=4)
+    t.create(TARGET_BASE_SCHEMA)
+    m = replay_batch(spark, t, batch, "s", 0, max_broadcast_keys=None)
+    assert m["rows_resolved"] == 2 and m["rows_seen"] == 3
+    assert m["rows_nullkey_dropped_groups"] == 1
+    assert m["rows_nullkey_dropped"] == 1
+    assert t.read(spark).count() == 2
 
 
 def test_schema_event_footer_fast_path(spark, tmp_path):
@@ -320,7 +356,7 @@ def test_schema_event_footer_fast_path(spark, tmp_path):
     import pandas as pd
 
     from nostr_data_pipeline_spark.cdc.replayer import (
-        LOG_SCHEMA, _footer_proves_no_schema_events, collect_schema_events,
+        LOG_SCHEMA, _footers_prove_no_schema_events, collect_schema_events,
     )
 
     def _log_df(with_sc):
@@ -345,8 +381,7 @@ def test_schema_event_footer_fast_path(spark, tmp_path):
     _log_df(True).coalesce(1).write.parquet(sc_dir)
 
     clean = spark.read.schema(LOG_SCHEMA).parquet(clean_dir)
-    for f in clean.inputFiles():
-        assert _footer_proves_no_schema_events(f)
+    assert _footers_prove_no_schema_events(clean)
     # the fast path must not touch the executors: poison the scan
     poisoned = clean.filter
     try:
@@ -357,52 +392,17 @@ def test_schema_event_footer_fast_path(spark, tmp_path):
         clean.filter = poisoned
 
     dirty = spark.read.schema(LOG_SCHEMA).parquet(sc_dir)
-    assert not all(_footer_proves_no_schema_events(f)
-                   for f in dirty.inputFiles())
+    assert not _footers_prove_no_schema_events(dirty)
     got = collect_schema_events(dirty)
     assert [(r["sc_col_name"], r["sc_col_type"]) for r in got] == [
         ("stars", "long")]
-
-
-def test_footer_batch_counts_proof_and_fallback(spark, tmp_path):
-    """Footer counts fire only when every key column's null_count is
-    provably zero; one possibly-null key falls back to None (the exact
-    null-key count needs a scan). Soundness: can only SKIP the scan."""
-    import pandas as pd
-
-    from nostr_data_pipeline_spark.cdc.replayer import (
-        LOG_SCHEMA, _footer_batch_counts,
-    )
-
-    def _df(null_key):
-        rows = pd.DataFrame({
-            "event_id": ["e1", "e2"],
-            "seq": pd.array([1, 2], dtype="int64"),
-            "op": ["upsert", "upsert"],
-            "repo": ["r1", None if null_key else "r2"],
-            "path": ["a", "b"],
-            "ts": pd.to_datetime(["2024-01-01"] * 2),
-            "commit": ["c", "d"], "lang": ["py", "py"],
-            "content": ["x", "y"], "extra_json": [None, None],
-            "sc_col_name": [None, None], "sc_col_type": [None, None],
-        })
-        return spark.createDataFrame(rows, LOG_SCHEMA)
-
-    clean_dir, null_dir = str(tmp_path / "c"), str(tmp_path / "n")
-    _df(False).coalesce(1).write.parquet(clean_dir)
-    _df(True).coalesce(1).write.parquet(null_dir)
-    clean = spark.read.schema(LOG_SCHEMA).parquet(clean_dir)
-    assert _footer_batch_counts(clean, ("repo", "path")) == (2, 0)
-    dirty = spark.read.schema(LOG_SCHEMA).parquet(null_dir)
-    assert _footer_batch_counts(dirty, ("repo", "path")) is None
-    assert _footer_batch_counts(clean, ("repo", "nope")) is None
 
 
 def test_resolve_lww_non_exact_mode_keeps_ties_for_mor(spark):
     """exact_one_per_key=False returns winner-FILTERED rows (redelivered
     winners / equal-seq ties survive); the MoR read-side resolution then
     collapses them to the identical final state the exact mode produces."""
-    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
+    from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
 
     rows = [
         ("r1", "a", 3, "e3", "new"),
@@ -422,14 +422,8 @@ def test_resolve_lww_non_exact_mode_keeps_ties_for_mor(spark):
     ])
     exact = resolve_lww(df, ("repo", "path"), "seq", "event_id",
                         max_broadcast_keys=None)
-    # downstream winner rule (max_by (seq, tie)) collapses loose == exact
-    from pyspark.sql import functions as F
-    collapsed = (
-        loose.groupBy("repo", "path")
-        .agg(F.max_by(F.struct("seq", "event_id", "v"),
-                      F.struct(F.col("seq"), F.col("event_id"))).alias("w"))
-        .select("repo", "path", "w.seq", "w.event_id", "w.v")
-    )
+    # the downstream winner rule collapses loose == exact
+    collapsed = lww_reduce(loose, ("repo", "path"), "seq", "event_id")
     assert sorted(map(tuple, collapsed.collect())) == \
         sorted(map(tuple, exact.collect()))
 
@@ -488,22 +482,23 @@ def _null_seq_frame():
 
 
 @pytest.mark.parametrize(
-    "n_batches,lww_mode",
-    [(1, "maxseq"), (4, "maxseq"), (3, "agg"), (2, "salted_window"),
-     (2, "maxseq_shuffle")],
+    "n_batches,config", [(1, "maxseq"), (4, "maxseq"), (2, "maxseq_shuffle")],
 )
-def test_replay_null_seq_rows_match_oracle(spark, tmp_path, n_batches,
-                                           lww_mode):
-    """NULL-seq rows must neither vanish (multi-batch slicing, maxseq
-    join-back) nor win the LWW race (pandas NaN-sorts-last artifact): every
-    mode and batch split must land on the oracle's normalized state."""
+def test_replay_null_seq_rows_match_oracle(spark, tmp_path, monkeypatch,
+                                           n_batches, config):
+    """NULL-seq rows must neither vanish (multi-batch slicing, winner
+    join-back) nor win the LWW race (pandas NaN-sorts-last artifact): a
+    single batch, a seq-sliced replay and the shuffle join-back must land
+    on the oracle's normalized state. ``config`` names a MATRIX entry."""
     frame = _null_seq_frame()
     log_dir = str(tmp_path / "log")
     _write_frame_as_log(frame, log_dir)
     exp = reduce_log(frame)
 
     table = SnapshotTable(str(tmp_path / "tbl"), num_buckets=4)
-    replay_log(spark, table, log_dir, n_batches=n_batches, lww_mode=lww_mode)
+    monkeypatch.setattr(replayer, "replay_batch",
+                        partial(replayer.replay_batch, **MATRIX[config]))
+    replay_log(spark, table, log_dir, n_batches=n_batches)
     got = (table.read(spark).toPandas()
            .sort_values(["repo", "path"]).reset_index(drop=True))
     assert len(got) == len(exp)
@@ -516,20 +511,23 @@ def test_replay_null_seq_rows_match_oracle(spark, tmp_path, n_batches,
 
 
 def test_resolve_lww_all_null_seq_group_kept_all_modes(spark):
-    """An all-NULL-seq key must survive resolution in EVERY mode with the
-    same winner (tie column decides) — the maxseq join-back used a plain
-    equality filter that dropped the whole group."""
-    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
+    """An all-NULL-seq key must survive resolution under both join-backs
+    and in the one-pass winner rule, with the same winner (tie column
+    decides) — the join-back once used a plain equality filter that
+    dropped the whole group."""
+    from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
 
     df = spark.createDataFrame(
         [("r", "p", None, "e1", "old"), ("r", "p", None, "e2", "new"),
          ("r", "q", 7, "e3", "real")],
         "repo string, path string, seq long, event_id string, content string",
     )
-    for mode in ("maxseq", "maxseq_shuffle", "agg", "salted_window"):
-        got = {(r["repo"], r["path"]): r["content"]
-               for r in resolve_lww(df, mode=mode).collect()}
-        assert got == {("r", "p"): "new", ("r", "q"): "real"}, mode
+    outs = {"broadcast": resolve_lww(df, max_broadcast_keys=None),
+            "shuffle": resolve_lww(df, max_broadcast_keys=1),
+            "lww_reduce": lww_reduce(df, ("repo", "path"), "seq", "event_id")}
+    for name, out in outs.items():
+        got = {(r["repo"], r["path"]): r["content"] for r in out.collect()}
+        assert got == {("r", "p"): "new", ("r", "q"): "real"}, name
 
 
 def test_resolve_lww_rejects_reserved_columns(spark):
@@ -541,38 +539,6 @@ def test_resolve_lww_rejects_reserved_columns(spark):
     )
     with pytest.raises(ValueError, match="_max_seq"):
         resolve_lww(df)
-
-
-def test_agg_mode_null_key_metrics(spark, tmp_path):
-    """agg/salted_window lack the guard job; their counted fallback must
-    still EXCLUDE null-key winners from rows_resolved (merge drops them)
-    and surface the drop — not overstate and not stay silent."""
-    import pandas as pd
-
-    from nostr_data_pipeline_spark.cdc.replayer import (
-        LOG_SCHEMA, TARGET_BASE_SCHEMA, replay_batch,
-    )
-
-    rows = pd.DataFrame({
-        "event_id": ["e1", "e2", "e3"],
-        "seq": pd.array([1, 2, 3], dtype="int64"),
-        "op": ["upsert"] * 3,
-        "repo": ["r1", None, "r1"],
-        "path": ["a", "b", "c"],
-        "ts": pd.to_datetime(["2024-01-01"] * 3),
-        "commit": ["c"] * 3, "lang": ["py"] * 3,
-        "content": ["x", "y", "z"],
-        "extra_json": [None] * 3,
-        "sc_col_name": [None] * 3, "sc_col_type": [None] * 3,
-    })
-    batch = spark.createDataFrame(rows, LOG_SCHEMA)
-    for i, mode in enumerate(("agg", "salted_window")):
-        t = SnapshotTable(str(tmp_path / f"t{i}"), num_buckets=4)
-        t.create(TARGET_BASE_SCHEMA)
-        m = replay_batch(spark, t, batch, "s", 0, lww_mode=mode)
-        assert m["rows_resolved"] == 2 and m["rows_seen"] == 3, mode
-        assert m["rows_nullkey_dropped_groups"] == 1, mode
-        assert t.read(spark).count() == 2, mode
 
 
 def test_replay_log_empty_dir_chunked_folds_deltas(spark, tmp_path):

@@ -11,13 +11,24 @@ from nostr_data_pipeline_spark.cdc.replayer import LOG_SCHEMA, replay_batch, rep
 from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
 
 # zipf_a=6 makes repo-0000 receive ~97% of all events: the hot-key regime
-# the salted window / partial-agg paths exist for
+# the partial max(seq) aggregation exists for
 HOT = LogSpec(n_events=5000, n_repos=40, paths_per_repo=10, zipf_a=6.0,
               seed=5, n_files=4)
 
 
-@pytest.mark.parametrize("lww_mode", ["maxseq", "agg", "salted_window"])
-def test_hot_repo_skew_all_modes(spark, tmp_path, lww_mode):
+@pytest.mark.parametrize("max_broadcast_keys", [5_000_000, 1],
+                         ids=["maxseq", "maxseq_shuffle"])
+def test_hot_repo_skew_all_modes(spark, tmp_path, monkeypatch,
+                                 max_broadcast_keys):
+    """The hot key under both winner join-backs (broadcast, and shuffle
+    above the ceiling)."""
+    from functools import partial
+
+    from nostr_data_pipeline_spark.cdc import replayer
+
+    monkeypatch.setattr(replayer, "replay_batch",
+                        partial(replayer.replay_batch,
+                                max_broadcast_keys=max_broadcast_keys))
     log_dir = str(tmp_path / "log")
     write_log(log_dir, HOT)
     expected = reduce_log(make_log_frame(HOT))
@@ -26,8 +37,8 @@ def test_hot_repo_skew_all_modes(spark, tmp_path, lww_mode):
         expected_events := make_log_frame(HOT)
     )["repo"].value_counts(normalize=True).iloc[0]
     assert top_share > 0.8
-    table = SnapshotTable(str(tmp_path / f"tbl-{lww_mode}"), num_buckets=8)
-    replay_log(spark, table, log_dir, n_batches=2, lww_mode=lww_mode)
+    table = SnapshotTable(str(tmp_path / "tbl"), num_buckets=8)
+    replay_log(spark, table, log_dir, n_batches=2)
     got = table.read(spark).toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     assert list(got["content_sha256"]) == list(expected["content_sha256"])
 
