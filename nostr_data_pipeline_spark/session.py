@@ -4,6 +4,19 @@ Local-mode testing stands in for a multi-executor cluster; every config here
 is one that also makes sense at 1000 executors (AQE, Arrow, partition-count
 discipline). Scaling evidence is produced by running the same job at two
 parallelism levels (see bench_scaling.py).
+
+DataFrame origin capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on, PySpark
+4 wraps every ``F.*`` and Column call in ``_with_origin``: an active-session
+lookup, a ``conf.get``, a Python stack walk and ``PySparkCurrentOrigin``
+set/clear, most of them py4j round trips. At benchmark scale a CDC commit is
+fixed cost, and that wrapper made most of its driver round trips: a warm
+``replay_log`` of the perfbench ``cdc`` history (72k events, 8,864 keys,
+local[4], 4-vCPU host) made ~3,800 py4j round trips with capture on and
+~1,400 with it off. The flag is read once per process, on first use, so it
+is set here, at session build. Trade-off: errors raised from DataFrame-API
+calls lose the Python ``file:line`` fragment of their query context; JVM
+messages and Python tracebacks are unchanged.
 """
 
 from __future__ import annotations
@@ -66,6 +79,8 @@ def get_spark(
         # wide payload rows (MERGE join, LWW winner join). AQE still falls
         # back to SMJ when a build side would not fit.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # No per-call origin capture (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("local-cluster"):
         # executor python workers must resolve this package for mapInPandas

@@ -214,7 +214,7 @@ class SnapshotTable:
                  bucket_cols: tuple[str, ...] | None = None):
         """``target_file_rows``: when set, every bucket rewrite splits its
         output into files of at most this many rows (``maxRecordsPerFile``).
-        Because rewrites are ``sortWithinPartitions(*key_cols)``, the split
+        Because rewrites are key-sorted within each bucket, the split
         files cover CONTIGUOUS, DISJOINT key ranges — which is what makes
         file-level merge pruning bite: a trickle update into a bucket of M
         key-range files rewrites only the intersecting file(s), not the
@@ -506,7 +506,10 @@ class SnapshotTable:
         merge pruning needs."""
         w = (
             df.repartition(n_parts, F.col("_bucket"))
-            .sortWithinPartitions(*self.key_cols)
+            # ``_bucket`` leads the sort: Spark's planned write requires a
+            # sort on the partitionBy column and replaces a key-only sort
+            # with it, leaving the files unsorted by key.
+            .sortWithinPartitions("_bucket", *self.key_cols)
             .write.mode("overwrite")
         )
         if self.target_file_rows:
@@ -885,7 +888,11 @@ class SnapshotTable:
     def _read_files(self, spark: SparkSession, files: list[str],
                     schema: T.StructType) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], schema)
+            # limit(0) optimizes to an empty LocalRelation (a bare
+            # createDataFrame([]) is an opaque LogicalRDD), so
+            # PropagateEmptyRelation drops joins against it: a CoW merge into
+            # an empty table or new buckets skips the full-outer join.
+            return spark.createDataFrame([], schema).limit(0)
         paths = [os.path.join(self.path, f) for f in files]
         return spark.read.schema(schema).parquet(*paths)
 

@@ -82,23 +82,17 @@ def test_cli_end_to_end(env):
     assert json.loads(out[-1])["files"] > 0
 
 
-def test_cli_dedup_ingest(tmp_path):
+def test_cli_dedup_ingest(spark, tmp_path):
     """dedup-ingest subcommand: creates the index, streams the docs dir,
     drops the near-dup, reports per-batch metrics."""
-    from pyspark.sql import SparkSession
-
     from nostr_data_pipeline_spark.streaming.dedup_ingest import DOC_SCHEMA
 
-    spark = SparkSession.getActiveSession()
     docs = str(tmp_path / "docs")
     rows = [
         (1, "the quick brown fox jumps over the lazy dog again and again", 1),
         (2, "the quick brown fox jumps over the lazy dog again and again x", 1),
         (3, "some entirely different text about other matters entirely", 1),
     ]
-    if spark is None:
-        spark = (SparkSession.builder.master("local[4]")
-                 .config("spark.sql.shuffle.partitions", "4").getOrCreate())
     spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.parquet(docs)
     out = run_cli(
         "dedup-ingest", "--index", str(tmp_path / "idx"),
@@ -110,15 +104,9 @@ def test_cli_dedup_ingest(tmp_path):
     assert rep["batches"][0]["docs_dropped"] == 1
 
 
-def test_cli_corpus_hygiene(tmp_path):
+def test_cli_corpus_hygiene(spark, tmp_path):
     """corpus-hygiene subcommand: decontaminate vs an eval parquet, filter,
     scrub, pack; writes survivors and prints the metrics line."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        spark = (SparkSession.builder.master("local[4]")
-                 .config("spark.sql.shuffle.partitions", "4").getOrCreate())
     docs = str(tmp_path / "docs")
     ev = str(tmp_path / "eval")
     rows = [

@@ -12,6 +12,10 @@ the coalesce-merge materialization-stamp drop, and the key_cols layout guard.
 
 from __future__ import annotations
 
+import os
+import random
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,25 +43,39 @@ def _rows(n, seq=1, content="v1"):
     return [("r", f"p{i:04d}", f"{content}-{i}", seq, f"e{seq}-{i}") for i in range(n)]
 
 
-def _load(spark, tmp_path, n=40, target_file_rows=10, num_buckets=1):
+def _load(spark, tmp_path, n=40, target_file_rows=10, num_buckets=1,
+          shuffled=False):
+    rows = _rows(n)
+    if shuffled:
+        random.Random(7).shuffle(rows)
     t = SnapshotTable(str(tmp_path / "t"), num_buckets=num_buckets,
                       target_file_rows=target_file_rows)
     t.create(SCHEMA)
-    t.merge(spark, _df(spark, _rows(n)))
+    t.merge(spark, _df(spark, rows))
     return t
 
 
-def test_bulk_load_splits_into_disjoint_range_files(spark, tmp_path):
-    t = _load(spark, tmp_path)
+@pytest.mark.parametrize("num_buckets,shuffled", [(1, False), (2, True)],
+                         ids=["presorted-1bucket", "shuffled-2buckets"])
+def test_bulk_load_splits_into_disjoint_range_files(spark, tmp_path,
+                                                    num_buckets, shuffled):
+    t = _load(spark, tmp_path, num_buckets=num_buckets, shuffled=shuffled)
     m = t.manifest()
-    files = m["buckets"]["0"]
-    assert len(files) == 4  # 40 rows / 10 per file
+    files = [f for fs in m["buckets"].values() for f in fs]
+    if num_buckets == 1:
+        assert len(files) == 4  # 40 rows / 10 per file
     stats = m["file_stats"]
     assert set(stats) == set(files)
-    # key-sorted split => contiguous, disjoint ranges covering all keys
-    ranges = sorted((tuple(stats[f]["min"]), tuple(stats[f]["max"])) for f in files)
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert lo1 <= hi1 < lo2
+    # key-sorted split => contiguous, disjoint ranges within each bucket
+    for fs in m["buckets"].values():
+        ranges = sorted((tuple(stats[f]["min"]), tuple(stats[f]["max"])) for f in fs)
+        for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
+            assert lo1 <= hi1 < lo2
+    # every file is key-sorted, whatever order the rows arrived in
+    for f in files:
+        keys = [(r["repo"], r["path"]) for r in
+                pq.read_table(os.path.join(t.path, f), columns=["repo", "path"]).to_pylist()]
+        assert keys == sorted(keys), f
     assert sum(stats[f]["rows"] for f in files) == 40
 
 
@@ -253,8 +271,6 @@ def test_compact_merges_small_files_and_preserves_content(spark, tmp_path):
 def test_vacuum_reclaims_dead_files_not_whole_dirs(spark, tmp_path):
     """File-granular vacuum: a carried (still-referenced) file must survive
     even though its data dir contains dead siblings from the same version."""
-    import os
-
     t = _load(spark, tmp_path, n=40, target_file_rows=10, num_buckets=1)
     m1 = t.manifest()
     v1_files = set(m1["buckets"]["0"])  # 4 files in data-v2
@@ -313,8 +329,6 @@ def test_empty_merge_into_empty_table_is_noop(spark, tmp_path):
 
 
 def test_vacuum_no_crc_orphans_and_keeps_live_success(spark, tmp_path):
-    import os
-
     t = _load(spark, tmp_path, n=40, target_file_rows=10, num_buckets=1)
     t.merge(spark, _df(spark, [("r", "p0015", "updated", 2, "e2")]))
     t.vacuum(keep_versions=1)

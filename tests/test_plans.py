@@ -171,3 +171,24 @@ def test_corpus_prepare_pushes_lang_filter(spark):
     is computed so it can't push — but lang can and must."""
     plan = plan_of(A.corpus_prepare(spark, SF))
     assert "In(lang" in plan, plan.split("ReadSchema")[0][-500:]
+
+
+def test_empty_read_optimizes_away_the_merge_join(spark, tmp_path):
+    """An empty file list reads as an empty LocalRelation the optimizer can
+    see, so a full-outer join against it (a CoW merge into an empty table or
+    into new buckets) plans with no Join at all."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
+
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("v", T.StringType())])
+    t = SnapshotTable(str(tmp_path / "tbl"), key_cols=("k",), num_buckets=2)
+    empty = t._read_files(spark, [], schema)
+    assert optimized_of(empty).startswith("LocalRelation <empty>")
+    src = spark.range(3).selectExpr("id AS k", "'x' AS v")
+    joined = src.alias("s").join(empty.alias("t"), F.col("s.k") == F.col("t.k"),
+                                 "full_outer")
+    assert "Join" not in optimized_of(joined)
+    assert joined.count() == 3
