@@ -178,11 +178,9 @@ def skew_lww_bench() -> None:
     """`python bench.py --skew-lww`: hot-key skew datapoint for the LWW
     reduction (round-5 verdict task; SURVEY §4 skew handling). Builds a
     change log where ONE (repo, path) key holds ~30% of all events — the
-    adversarial mega-entity shape — and times resolve_lww over it with
-    both join-backs: `broadcast` (``max_broadcast_keys=None``) and
-    `shuffle` (``max_broadcast_keys=1``, which also runs the winner count).
-    Partial aggregation of ``max(seq)`` collapses the hot key map-side in
-    both. Prints one JSON line."""
+    adversarial mega-entity shape — and times the one-pass resolve_lww over
+    it (best of three, as `one_pass`). The partial ``max_by`` aggregation
+    collapses the hot key map-side. Prints one JSON line."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -219,20 +217,15 @@ def skew_lww_bench() -> None:
         hot = src.filter("repo = 'megarepo'").count()
         out["hot_key_share"] = round(hot / src.count(), 3)
 
-        def timed(max_broadcast_keys: int | None) -> float:
-            best = None
-            for _ in range(3):
-                t0 = time.perf_counter()
-                resolve_lww(src, max_broadcast_keys=max_broadcast_keys).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            return round(best, 3)
-
-        # ONE untimed warm-up lap for codegen/page cache (timed() would
-        # burn three full resolves to warm what one covers)
-        resolve_lww(src, max_broadcast_keys=None).count()
-        for join_back, ceiling in (("broadcast", None), ("shuffle", 1)):
-            out[join_back] = timed(ceiling)
+        # ONE untimed warm-up lap for codegen/page cache
+        resolve_lww(src).count()
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            resolve_lww(src).count()
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        out["one_pass"] = round(best, 3)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print(_json.dumps(out))
@@ -403,16 +396,16 @@ def main() -> None:
         # --- streaming path (the mode the north rule names): the same log
         # tailed as a file stream through foreachBatch -> LWW -> MERGE with
         # checkpointing, in micro-batches (maxFilesPerTrigger). Primary
-        # recipe = the trickle fast path (merge-on-read delta commits,
-        # vouched winner broadcast -> one Spark job per micro-batch beyond
-        # the schema scan), timed INCLUDING the final fold so the table ends
+        # recipe = the trickle fast path (merge-on-read delta commits: one
+        # Spark job per micro-batch beyond the schema scan, metrics from
+        # Observations), timed INCLUDING the final fold so the table ends
         # in the same fully-compacted state the CoW path produces.
         # cdc_stream_cow keeps the round-3-comparable copy-on-write recipe.
         from nostr_data_pipeline_spark.streaming.replayer import StreamingReplayer
 
         # untimed streaming warm-up: the batch-replay warm-up above does NOT
-        # compile the streaming plan shapes (file-slice source, vouched
-        # loose-LWW delta write, delta fold) — measured ~5-6s of one-time
+        # compile the streaming plan shapes (file-slice source, one-pass
+        # LWW delta write, delta fold) — measured ~5-6s of one-time
         # codegen landing in the first two micro-batches otherwise. One
         # log file streamed into a throwaway table covers them; at
         # north-rule scale (thousands of micro-batches) this cost is zero.
@@ -426,7 +419,7 @@ def main() -> None:
         StreamingReplayer(
             warm_stbl, warm_src, os.path.join(tmp, "warmstream_ckpt"),
             max_files_per_trigger=8, collect_lineage=False,
-            merge_mode="mor", max_broadcast_keys=None,
+            merge_mode="mor",
         ).run_to_completion(spark)
         warm_stbl.fold_deltas(spark)
 
@@ -442,7 +435,7 @@ def main() -> None:
             rep = StreamingReplayer(
                 stream_table, log_dir, os.path.join(tmp, f"ckpt{i}"),
                 max_files_per_trigger=8, collect_lineage=False,
-                merge_mode="mor", max_broadcast_keys=None,
+                merge_mode="mor",
             )
             t0 = time.perf_counter()
             q = rep.start(spark, available_now=True)
@@ -531,7 +524,7 @@ def main() -> None:
         "cdc_replay_min_spread": replay_min_spread,
         "stream_events_per_sec": round(stream_events_per_sec, 1),
         "stream_trial_secs": stream_trial_secs,
-        "stream_recipe": "mor-delta+vouched-broadcast+final-fold",
+        "stream_recipe": "mor-delta+one-pass-lww+final-fold",
         "cdc_rows_applied": result.rows_applied,
         "trickle_rows": trickle_rows,
         "trickle_merge_cow_sec": round(trickle_cow_sec, 3),

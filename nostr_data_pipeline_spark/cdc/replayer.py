@@ -10,20 +10,25 @@ Pipeline per (micro-)batch — all DataFrame-native, exactly ONE wide shuffle
 of the batch (the LWW aggregation) before the merge join:
 1. split off ``schema_change`` rows (tiny; metadata commits — evolution is
    order-independent, see SnapshotTable.evolve_column),
-2. LWW-resolve per (repo, path) via a partial-aggregating ``max(seq)``
-   and the winner join-back (cdc/lww.py) — this also subsumes the
-   reference's in-batch dedup
+2. LWW-resolve per (repo, path) in one partial-aggregating ``max_by`` pass
+   (cdc/lww.py) — this also subsumes the reference's in-batch dedup
    (/root/reference/src/nostr_pipeline/pipeline.py:202-211): verbatim
    duplicate event_ids cannot change the (seq, event_id)-max winner,
 3. normalize + sha256 the winning content via the vectorized pandas UDF,
 4. seq-guarded MERGE with tombstoned deletes and exactly-once markers
    (cross-batch duplicates/replays fail the strict '>' guard -> no-ops).
+
+The batch metrics ride Observations on the batch and on the resolved rows,
+so they fill inside the merge's own jobs: no job runs only to count.
 """
 
 from __future__ import annotations
 
+import operator
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -32,7 +37,10 @@ from pyspark.sql import types as T
 
 from nostr_data_pipeline_spark.cdc.lww import resolve_lww
 from nostr_data_pipeline_spark.functions.content import content_sha256
-from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
+from nostr_data_pipeline_spark.tables.snapshot_table import (
+    SnapshotTable,
+    observed_metrics,
+)
 
 LOG_SCHEMA = T.StructType(
     [
@@ -103,11 +111,7 @@ class ReplayResult:
 
 
 def prepare_batch(batch: DataFrame, table: SnapshotTable,
-                  max_broadcast_keys: int | None = 5_000_000,
-                  stats: dict | None = None,
-                  group_expr: Any = None,
-                  input_observation: Any = None,
-                  exact_one_per_key: bool = True) -> DataFrame:
+                  max_broadcast_keys: int | None = None) -> DataFrame:
     """Data rows of one batch -> LWW-resolved rows shaped for MERGE.
 
     Shuffle discipline (this is the hot path of the primary metric):
@@ -120,10 +124,9 @@ def prepare_batch(batch: DataFrame, table: SnapshotTable,
       only — never on LWW losers or duplicate copies.
     - ``extra_json`` travels raw; evolved columns are virtual (projected at
       read time), so no parse happens here.
-    - the broadcast-OOM guard lives inside resolve_lww (the winner set is
-      counted post-aggregation); pass ``stats`` to share the persisted
-      winner set between the count and the join-back (the caller
-      unpersists ``stats['winners']`` once the result is materialized)."""
+
+    Lazy: nothing runs until the caller's action."""
+    # max_broadcast_keys is ignored; perfbench still passes it
     cols = [
         F.col("repo"), F.col("path"), F.col("commit"), F.col("lang"),
         F.col("content"),
@@ -133,11 +136,7 @@ def prepare_batch(batch: DataFrame, table: SnapshotTable,
         (F.col("op") == "delete").alias("_deleted"),
     ]
     shaped = batch.select(*cols)
-    resolved = resolve_lww(shaped, tuple(table.key_cols), "seq", "event_id",
-                           max_broadcast_keys=max_broadcast_keys, stats=stats,
-                           group_expr=group_expr,
-                           input_observation=input_observation,
-                           exact_one_per_key=exact_one_per_key)
+    resolved = resolve_lww(shaped, tuple(table.key_cols), "seq", "event_id")
     resolved = resolved.withColumn(
         # vectorized pandas UDF: normalize + sha256 (input_hint mandate)
         "content_sha256",
@@ -198,6 +197,31 @@ def collect_schema_events(batch: DataFrame) -> list:
     )
 
 
+@contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs started inside with ``text``; the caller's own
+    description comes back afterwards."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _observe_rows(df: DataFrame, key_cols) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its row count (``rows``) and of its
+    rows with a NULL key component (``null_key``)."""
+    null_key = reduce(operator.or_, [F.col(k).isNull() for k in key_cols])
+    obs = Observation(f"replay-{uuid.uuid4().hex[:8]}")
+    return df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.when(null_key, 1).otherwise(0)).alias("null_key"),
+    ), obs
+
+
 def replay_batch(
     spark: SparkSession,
     table: SnapshotTable,
@@ -206,7 +230,6 @@ def replay_batch(
     batch_id: int,
     collect_lineage: bool = True,
     cache_batch: bool = False,
-    max_broadcast_keys: int | None = 5_000_000,
     merge_mode: str = "cow",
 ) -> dict[str, Any]:
     """Apply one micro-batch (data + schema_change rows mixed) exactly once.
@@ -218,35 +241,27 @@ def replay_batch(
     needs — and readers resolve base+deltas until ``table.compact()`` folds
     them (see ``replay_log(compact_every=...)``).
 
-    ``max_broadcast_keys``: live-key ceiling for the LWW winner broadcast
-    (enforced inside resolve_lww as an exact post-aggregation count of the
-    winner set — no separate probe scan of the batch); above it the
-    join-back shuffles (a 5M winner set is ~500MB as a hash relation — size
-    to your executors). ``None`` forces the broadcast.
+    Metrics never cost a job of their own. rows_seen and null-key rows ride
+    an Observation on the batch's data rows; rows_resolved and null-key
+    groups ride one on the LWW output. Both fill in the first job that
+    evaluates the resolved batch — the merge's probe or write. Only
+    ``collect_lineage=True`` under CoW runs one more job: the resolved batch
+    is persisted and counted per bucket, which gives
+    ``lineage_rows_per_bucket`` and the merge's affected-bucket set
+    (``source_buckets``). A MoR commit records its lineage from the written
+    delta files' footers instead.
 
-    Metrics come from one of two paths, neither of which scans the batch
-    for them:
-
-    - COUNTED (the default): the winner aggregation is persisted and
-      counted in ONE job that answers rows_seen, rows_resolved, null-key
-      rows and groups, per-bucket lineage, and the merge's affected-bucket
-      set (``source_buckets``); the join-back reuses the cached winners.
-    - OBSERVED: ``max_broadcast_keys=None`` + ``merge_mode='mor'``. No job
-      beyond the delta write: rows_seen and null-key rows ride an
-      Observation on the winner aggregation's input inside that job,
-      rows_resolved is the delta write's own rows_written, and lineage
-      comes from the written files' footers. This is the streaming trickle
-      path; the caller vouches that a micro-batch's winner set fits the
-      executors (bounded triggers do).
+    The jobs carry a description per phase: "replay: schema events",
+    "replay: lineage" and "replay: resolve+write".
 
     ``cache_batch``: False (batch replay over a static DataFrame, or a
     deterministic file-slice micro-batch) leaves the batch uncached — each
-    consumer (schema-event collect, the winner aggregation, the wide probe)
-    re-scans the parquet, which is cheap and side-effect-free. True
-    (streaming foreachBatch over a stateful dedup): the batch is
-    ``persist()``ed and materialized ONCE — its lineage contains the
-    STATEFUL dedup operator, and every extra evaluation would re-execute it
-    against already-committed state with no guarantee of stability."""
+    consumer (schema-event collect, the LWW pass, a probe) re-scans the
+    parquet, which is cheap and side-effect-free. True (streaming
+    foreachBatch over a stateful dedup): the batch is ``persist()``ed and
+    materialized ONCE — its lineage contains the STATEFUL dedup operator,
+    and every extra evaluation would re-execute it against
+    already-committed state with no guarantee of stability."""
     m = table.manifest()
     last = m["commits"].get(stream_id)
     if last is not None and batch_id <= last:
@@ -262,7 +277,8 @@ def replay_batch(
         # add_seq, see SnapshotTable.evolve_column), so no seq-epoch
         # splitting is needed: apply the metadata commits, then merge the
         # whole batch at once.
-        sc = collect_schema_events(batch)
+        with _job_description(spark, "replay: schema events"):
+            sc = collect_schema_events(batch)
         for r in sorted(sc, key=lambda r: int(r["seq"] or 0)):
             table.evolve_column(
                 r["sc_col_name"], r["sc_col_type"], int(r["seq"] or 0)
@@ -277,81 +293,58 @@ def replay_batch(
         data = data.withColumn(
             "seq", F.coalesce(F.col("seq"), F.lit(0).cast("long"))
         )
-        observed = max_broadcast_keys is None and merge_mode == "mor"
-        obs = Observation(f"lww-in-{uuid.uuid4().hex[:8]}") if observed else None
-        lww_stats: dict[str, Any] = {}
-        resolved = prepare_batch(data, table,
-                                 max_broadcast_keys=max_broadcast_keys,
-                                 stats=None if observed else lww_stats,
-                                 group_expr=(None if observed
-                                             else table.bucket_expr()),
-                                 input_observation=obs,
-                                 # the MoR sink re-resolves with the SAME
-                                 # winner rule at read/fold time, so the
-                                 # per-batch residual tie reduction is
-                                 # redundant there — skip its shuffle
-                                 exact_one_per_key=not observed)
-        # Counted path: the resolved batch feeds multiple consumers (bucket
-        # pruning and the merge join) — cache it so LWW runs once per batch.
-        # Observed path: exactly ONE consumer (the delta write); caching
-        # would only add a store-and-reload of the winner set.
-        if not observed:
+        data, seen = _observe_rows(data, table.key_cols)
+        resolved, out = _observe_rows(prepare_batch(data, table),
+                                      table.key_cols)
+        lineage = None
+        count_lineage = collect_lineage and merge_mode == "cow"
+        if count_lineage:
             resolved = resolved.persist()
         try:
-            groups = lww_stats.get("groups")
-            lineage = dict(groups) if collect_lineage and groups else None
-            metrics: dict[str, Any] = {"batch_id": batch_id, "schema_changes": len(sc)}
-            metrics.update(
-                table.merge(
+            if count_lineage:
+                with _job_description(spark, "replay: lineage"):
+                    lineage = {
+                        str(r[0]): r[1] for r in
+                        resolved.dropna(subset=list(table.key_cols))
+                        .groupBy(table.bucket_expr()).count().collect()
+                    }
+            with _job_description(spark, "replay: resolve+write"):
+                metrics: dict[str, Any] = {"batch_id": batch_id,
+                                           "schema_changes": len(sc)}
+                metrics.update(table.merge(
                     spark, resolved, stream_id=stream_id, batch_id=batch_id,
-                    extra_metrics={"lineage_rows_per_bucket": lineage} if lineage else None,
+                    extra_metrics=({"lineage_rows_per_bucket": lineage}
+                                   if lineage else None),
                     merge_mode=merge_mode,
                     # sound because LOG_SCHEMA key types == target key types
                     # (strings), so merge's conform-cast cannot move a row
-                    # to a different bucket than the count job hashed it to
-                    source_buckets=(
-                        sorted(int(b) for b in groups) if groups is not None else None
-                    ),
-                )
-            )
-            if observed:
-                if metrics.get("skipped_replay"):
-                    # no write action ran, so the observation never fired;
-                    # reading it would block forever (a concurrent writer
-                    # can land the commit after the marker check above)
-                    return metrics
-                # the delta row count keeps winner redeliveries and
-                # equal-seq ties (exact_one_per_key=False — they collapse at
-                # read/fold), so there rows_superseded_or_duplicate is a
-                # LOWER bound on the true duplicate count;
-                # rows_resolved_exact marks which accounting a batch
-                # carries. (_merge_delta records the footer-derived
-                # per-bucket lineage for every MoR commit.)
-                om = obs.get
-                rows_seen = int(om.get("rows_total") or 0)
-                rows_resolved = int(metrics.get("rows_written") or 0)
-                if om.get("rows_nullkey"):
-                    metrics["rows_nullkey_dropped"] = int(om["rows_nullkey"])
-            else:
-                rows_seen = lww_stats["rows_total"]
-                rows_resolved = lww_stats["n_keys"]
-                # null-key rows are unmergeable: the join-back drops them,
-                # but never silently
-                if lww_stats["null_key_groups"]:
-                    metrics["rows_nullkey_dropped"] = lww_stats["null_key_rows"]
-                    metrics["rows_nullkey_dropped_groups"] = lww_stats["null_key_groups"]
-                metrics["lww_keys"] = lww_stats["n_keys"]
-                metrics["lww_join_back"] = lww_stats["join_back"]
-            metrics["rows_seen"] = rows_seen
-            metrics["rows_resolved"] = rows_resolved
-            # duplicates + LWW-superseded rows per batch (reference T2/A14),
-            # null-key rows included
-            metrics["rows_superseded_or_duplicate"] = max(0, rows_seen - rows_resolved)
-            metrics["rows_resolved_exact"] = not observed
+                    # to a different bucket than the lineage job hashed it to
+                    source_buckets=(sorted(int(b) for b in lineage)
+                                    if lineage is not None else None),
+                ))
         finally:
-            if not observed:
+            if count_lineage:
                 resolved.unpersist()
-                lww_stats["winners"].unpersist()
+        if metrics.get("skipped_replay"):
+            # a concurrent writer landed the commit after the marker check
+            # above: no job evaluated the batch, so the Observations never
+            # fill and reading them would block forever
+            return metrics
+        seen_m, out_m = observed_metrics(seen), observed_metrics(out)
+        rows_seen = int(seen_m.get("rows") or 0)
+        rows_resolved = (int(out_m.get("rows") or 0)
+                         - int(out_m.get("null_key") or 0))
+        if seen_m.get("null_key"):
+            # null-key rows are unmergeable: the merge drops them, but never
+            # silently
+            metrics["rows_nullkey_dropped"] = int(seen_m["null_key"])
+            metrics["rows_nullkey_dropped_groups"] = int(out_m.get("null_key") or 0)
+        metrics["rows_seen"] = rows_seen
+        metrics["rows_resolved"] = rows_resolved
+        # duplicates + LWW-superseded rows per batch (reference T2/A14),
+        # null-key rows included
+        metrics["rows_superseded_or_duplicate"] = max(0, rows_seen - rows_resolved)
+        metrics["rows_resolved_exact"] = True
         return metrics
     finally:
         if cache_batch:

@@ -65,9 +65,7 @@ def cmd_stream(spark, args) -> None:
 
     rep = StreamingReplayer(_table(args), args.log, args.checkpoint,
                             merge_mode=args.merge_mode,
-                            compact_every=args.compact_every,
-                            max_broadcast_keys=(None if args.vouch_broadcast
-                                                else 5_000_000))
+                            compact_every=args.compact_every)
     metrics = rep.run_to_completion(spark)
     print(json.dumps({"metrics": metrics}))
 
@@ -280,11 +278,6 @@ def main(argv=None) -> int:
                     dest="merge_mode")
     sp.add_argument("--compact-every", type=int, default=None,
                     dest="compact_every")
-    sp.add_argument("--vouch-broadcast", action="store_true",
-                    dest="vouch_broadcast",
-                    help="micro-batches are trigger-bounded: force the LWW "
-                         "winner broadcast (with --merge-mode mor this is the "
-                         "one-job-per-batch trickle fast path)")
     sp = sub.add_parser("stats"); common(sp)
     sp = sub.add_parser("trending"); common(sp)
     sp.add_argument("--limit", type=int, default=10)

@@ -28,6 +28,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of the host's memory, at least 1g and at most 4g, which leaves
+    room for the Python workers and the page cache (perfbench sizes its
+    runs the same way). ``mem_total_bytes`` defaults to this host's."""
+    if mem_total_bytes is None:
+        mem_total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(4, int(mem_total_bytes / 2**30 / 4)))}g"
+
+
 def get_spark(
     app_name: str = "nostr_data_pipeline_spark",
     cores: int | str | None = None,
@@ -66,7 +76,8 @@ def get_spark(
         # Deterministic timestamps vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver is the only JVM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # Throughput GC: measured on this host, default G1 anti-scales badly
         # with thread count (a 32-thread CPU-bound job ran 8x SLOWER than at
         # 8 threads under G1; ParallelGC restores near-linear scaling).

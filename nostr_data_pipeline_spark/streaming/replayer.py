@@ -84,7 +84,7 @@ class StreamingReplayer:
         source_factory: Callable[[SparkSession], DataFrame] | None = None,
         merge_mode: str = "cow",
         compact_every: int | None = None,
-        max_broadcast_keys: int | None = 5_000_000,
+        max_broadcast_keys: int | None = None,
     ):
         """``source_factory``: optional seam replacing the default file-stream
         reader (SURVEY S1 maps the reference's live WebSocket tail to "file
@@ -118,15 +118,11 @@ class StreamingReplayer:
         ``spark.sql.autoBroadcastJoinThreshold``; 8-16 micro-batch commits
         is comfortable, and folding belongs off-peak.
 
-        ``max_broadcast_keys``: the LWW winner-broadcast ceiling per
-        micro-batch (see resolve_lww). ``None`` VOUCHES that every
-        micro-batch's winner set fits the executors — sound when the trigger
-        bounds batch size (maxFilesPerTrigger / maxOffsetsPerTrigger) — and,
-        combined with ``merge_mode='mor'``, enables the one-job-per-batch
-        trickle fast path: no count job, the metrics ride the delta write's
-        own observation and the written files' parquet footers (see
-        replay_batch). This is the recommended steady-state CDC ingest
-        configuration."""
+        Each micro-batch costs the merge's own jobs plus the schema-event
+        scan; its metrics ride Observations (see replay_batch). Under
+        ``merge_mode='mor'`` that is one delta write per batch — the
+        recommended steady-state CDC ingest configuration."""
+        # max_broadcast_keys is ignored; perfbench still passes it
         if dedup_mode not in ("guard", "watermark"):
             raise ValueError(f"unknown dedup_mode {dedup_mode}")
         self.table = table
@@ -140,7 +136,6 @@ class StreamingReplayer:
         self.source_factory = source_factory
         self.merge_mode = merge_mode
         self.compact_every = compact_every
-        self.max_broadcast_keys = max_broadcast_keys
         self._applied_batches = 0
 
     def _source(self, spark: SparkSession) -> DataFrame:
@@ -176,7 +171,6 @@ class StreamingReplayer:
             # writing every batch into storage memory first.
             cache_batch=(self.dedup_mode == "watermark"),
             merge_mode=self.merge_mode,
-            max_broadcast_keys=self.max_broadcast_keys,
         )
         self._applied_batches += 1
         if self.merge_mode == "mor" and self.compact_every:

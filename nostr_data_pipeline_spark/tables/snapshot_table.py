@@ -1342,7 +1342,7 @@ class SnapshotTable:
         Source rows with a NULL key component are EXCLUDED (unmergeable by
         definition — they could never match a prior version, so keeping
         them would re-insert a duplicate per merge); the CDC replayer
-        counts them upstream (``resolve_lww`` ``null_key_groups``).
+        counts them (``rows_nullkey_dropped`` and ``_groups``).
 
         ``merge_mode`` picks the physical strategy per call (Iceberg's
         ``write.merge.mode`` analogue):
@@ -1384,16 +1384,19 @@ class SnapshotTable:
         written but no live row died).
         Idempotent per (stream_id, batch_id): a replayed batch is a no-op.
 
-        The source is evaluated twice (affected-bucket probe + the write);
-        if the caller has not already persisted it, merge pins the conformed
-        source itself for the duration — both for the double-execution cost
-        and because a NON-DETERMINISTIC source (sample(), changed input
-        files) could otherwise hash rows into buckets the probe never saw,
-        writing files the manifest would not register.
+        Into a table with base files the source is evaluated twice
+        (affected-bucket probe + the write); if the caller has not already
+        persisted it, merge pins the conformed source itself for the
+        duration — both for the double-execution cost and because a
+        NON-DETERMINISTIC source (sample(), changed input files) could
+        otherwise hash rows into buckets the probe never saw, writing files
+        the manifest would not register. A bulk load (no base files) skips
+        the probe, marks every bucket affected and evaluates the source
+        exactly once, in the write, so it is never pinned.
 
         ``source_buckets``: optional EXACT set of bucket ids the source's
-        rows hash to, when the caller already knows it (the replayer's LWW
-        guard job computes per-bucket winner counts anyway) — skips the
+        rows hash to, when the caller already knows it (the replayer's
+        lineage job counts the resolved rows per bucket anyway) — skips the
         probe's own distinct-bucket collect on tables without file stats.
         The caller must compute it with this table's ``bucket_expr()`` over
         key values that are ALREADY the table's key types (a conform-cast
@@ -1432,10 +1435,9 @@ class SnapshotTable:
         # join on key equality is null-unsafe, so such a row could never
         # match its prior version and would re-insert a duplicate on EVERY
         # merge (and a null-key delta row would never resolve against base).
-        # The replayer surfaces their count upstream (resolve_lww
-        # null_key_groups) and its winner join-back already excludes them;
-        # direct callers get the same documented exclusion here. The filter
-        # fuses into the source scan — no extra job.
+        # The replayer counts them in Observations on its batch, and every
+        # caller gets the same documented exclusion here. The filter fuses
+        # into the source scan — no extra job.
         null_key = None
         for k in self.key_cols:
             c = F.col(k).isNull()
@@ -1472,7 +1474,11 @@ class SnapshotTable:
                     f"rule — run compact() first or match the columns"
                 )
         sl = source.storageLevel
-        own_cache = not (sl.useMemory or sl.useDisk)
+        # a bulk load (no base files) skips the probe and evaluates the
+        # source once, in the write: pinning it would only add a
+        # store-and-reload of the whole batch
+        own_cache = (not (sl.useMemory or sl.useDisk)
+                     and self._n_base_files(m) > 0)
         if own_cache:
             src = src.persist()
         try:
@@ -1570,6 +1576,13 @@ class SnapshotTable:
         }, touched={b for b, fs in written.items() if fs})
         return metrics
 
+    @staticmethod
+    def _n_base_files(m: dict[str, Any]) -> int:
+        """Live base files, without loading a shard of the sharded format."""
+        b_all = m["buckets"]
+        n = getattr(b_all, "n_files", None)
+        return sum(len(fs) for fs in b_all.values()) if n is None else n
+
     def _probe_touched_files(self, spark, src, m, schema,
                              source_buckets=None):
         """ONE narrow job answering both pruning questions: which buckets the
@@ -1593,9 +1606,7 @@ class SnapshotTable:
         # per-shard counts in the manifest answer this without loading any
         # shard on the sharded format.
         b_all = m["buckets"]
-        total_files = getattr(b_all, "n_files", None)
-        if total_files is None:
-            total_files = sum(len(fs) for fs in b_all.values())
+        total_files = self._n_base_files(m)
         if total_files == 0:
             return list(range(self.num_buckets)), set()
         stats_map = m.get("file_stats", {})
@@ -1628,8 +1639,8 @@ class SnapshotTable:
         ]
         if not ranges_rows:
             # no file stats: pruning is bucket-granular — the caller's hint
-            # (exact by construction: the replayer's guard job groups the
-            # winner set by this table's own bucket hash) replaces the
+            # (exact by construction: the replayer's lineage job groups the
+            # resolved batch by this table's own bucket hash) replaces the
             # distinct-bucket collect job entirely
             if source_buckets is not None:
                 affected = sorted(int(b) for b in source_buckets)
@@ -1777,8 +1788,9 @@ class SnapshotTable:
         self._write_bucketed(merged, out_dir, len(affected))
         # sum() over an empty merge (bulk-load fast path with an empty
         # source) observes NULL counters — normalize to 0
-        metrics = {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
-        if metrics["rows_written"] == 0:
+        metrics = {k: (0 if v is None else v)
+                   for k, v in observed_metrics(obs).items()}
+        if not metrics.get("rows_written"):
             # empty source (possible only via the bulk-load fast path, which
             # skips the probe): nothing to commit — same no-op contract the
             # probed path's empty-affected early return keeps
@@ -2321,6 +2333,18 @@ class SnapshotTable:
             raise
         return {"num_buckets": n, "previous": old_n,
                 "files": sum(len(v) for v in new_buckets.values())}
+
+
+def observed_metrics(obs) -> dict[str, Any]:
+    """The metrics of a ``pyspark.sql.Observation``, filled by the first job
+    that evaluated it. AQE replaces a query stage that produced no rows with
+    an empty relation, and an Observation inside that stage goes with it:
+    Spark then completes the Observation with an empty row without a
+    schema, which ``Observation.get`` cannot convert. Such an Observation
+    saw no rows, so this returns ``{}``."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 def _parquet_num_rows(path: str) -> int:

@@ -17,8 +17,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    # the test data is tiny; under get_spark's 24g default, ParallelGC grew
-    # the heap past 8 GB within half a suite run
+    # the test data is tiny; ParallelGC grows the heap toward its cap (a 24g
+    # cap once grew it past 8 GB within half a suite run)
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s

@@ -105,7 +105,7 @@ def test_kafka_source_factory_round_trip(kafka_spark, tmp_path):
 
     rep = StreamingReplayer(
         table, "", str(tmp_path / "ckpt"),
-        source_factory=factory, merge_mode="mor", max_broadcast_keys=None,
+        source_factory=factory, merge_mode="mor",
     )
     q = rep.start(spark, available_now=True)
     q.awaitTermination()

@@ -3,7 +3,7 @@
 - filters/projections reach the parquet scan (PushedFilters / ReadSchema),
 - small dims broadcast (BroadcastHashJoin, never SortMergeJoin on dims),
 - top-k plans TakeOrderedAndProject (no full sort),
-- LWW agg is a partial+final hash aggregate (map-side combine),
+- LWW is one partial+final max_by aggregate (map-side combine),
 - no Python row UDFs anywhere in the analytics surface (only ArrowEval).
 """
 
@@ -57,47 +57,10 @@ def test_no_row_python_udfs_in_analytics(spark):
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
 
 
-def test_cdc_prepare_uses_arrow_udf_only(spark, tmp_path):
+def _cdc_batch(spark, tmp_path):
+    """A tiny CDC log's data rows and an empty 4-bucket target table."""
     from nostr_data_pipeline_spark.cdc.generator import LogSpec, write_log
-    from nostr_data_pipeline_spark.cdc.replayer import LOG_SCHEMA, TARGET_BASE_SCHEMA, prepare_batch
-    from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
-
-    d = str(tmp_path / "log")
-    write_log(d, LogSpec(n_events=500, n_repos=5, paths_per_repo=5, seed=1, n_files=1))
-    t = SnapshotTable(str(tmp_path / "tbl"), num_buckets=4)
-    t.create(TARGET_BASE_SCHEMA)
-    log = spark.read.schema(LOG_SCHEMA).parquet(d)
-    data = log.filter("op != 'schema_change'")
-
-    # the winner-seq pass must be a pruned-scan HashAggregate — content
-    # never read on that side — and the winner set joins back as a
-    # BROADCAST, so the wide payload is filtered map-side and crosses NO
-    # wide shuffle (the only Exchange left is the tiny residual tie-resolve
-    # over ~one row per key)
-    plan = plan_of(prepare_batch(data, t))
-    assert "ArrowEvalPython" in plan      # vectorized pandas UDF
-    assert "BatchEvalPython" not in plan  # never per-row Python
-    assert "HashAggregate" in plan and "partial_max(seq" in plan
-    assert "BroadcastHashJoin" in plan, "winner join-back must broadcast"
-    pruned_scans = [
-        seg.splitlines()[0] for seg in plan.split("ReadSchema: ")[1:]
-    ]
-    assert any("content" not in s for s in pruned_scans), (
-        "max(seq) pass should scan without the content column"
-    )
-
-
-def test_lww_guard_folds_into_winner_agg(spark, tmp_path):
-    """The broadcast-OOM guard must not cost an extra scan of the batch:
-    with caller-managed stats, the winner set is persisted, the guard count
-    is served by that cache, and the join-back reads the winners from
-    memory — so the batch parquet appears exactly ONCE in the plan before
-    the merge join (round-1 verdict item #2)."""
-    from nostr_data_pipeline_spark.cdc.generator import LogSpec, write_log
-    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
-    from nostr_data_pipeline_spark.cdc.replayer import (
-        LOG_SCHEMA, TARGET_BASE_SCHEMA, prepare_batch,
-    )
+    from nostr_data_pipeline_spark.cdc.replayer import LOG_SCHEMA, TARGET_BASE_SCHEMA
     from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
 
     d = str(tmp_path / "log")
@@ -105,45 +68,42 @@ def test_lww_guard_folds_into_winner_agg(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "tbl"), num_buckets=4)
     t.create(TARGET_BASE_SCHEMA)
     data = spark.read.schema(LOG_SCHEMA).parquet(d).filter("op != 'schema_change'")
+    return data, t
 
-    stats: dict = {}
-    resolved = prepare_batch(data, t, stats=stats)
-    try:
-        plan = plan_of(resolved)
-        assert stats["join_back"] == "broadcast" and stats["n_keys"] == 25
-        # winner side comes from cache, not a second parquet read
-        assert "InMemoryTableScan" in plan
-        # the text after InMemoryRelation is the *description* of the
-        # already-executed cache job, not a live scan — count before it
-        live = plan.split("InMemoryRelation")[0]
-        n_scans = live.count("FileScan") + live.count("BatchScan")
-        assert n_scans == 1, f"batch must be scanned once pre-merge, saw {n_scans}"
-        assert "BroadcastHashJoin" in plan
-    finally:
-        stats["winners"].unpersist()
 
-    # guard fallback: a tiny ceiling must degrade to the shuffle join —
-    # for ANY direct resolve_lww caller, not just the replayer
-    shaped = data.select("repo", "path", "seq", "event_id", "content")
-    stats2: dict = {}
-    out = resolve_lww(shaped, ("repo", "path"), "seq", "event_id",
-                      max_broadcast_keys=1, stats=stats2)
-    try:
-        assert stats2["join_back"] == "shuffle"
-        # the FORCED hint must be gone — broadcast is now Spark's own
-        # autoBroadcastJoinThreshold decision (which respects the 8GB cap),
-        # so an over-ceiling winner set can no longer OOM the executors
-        assert "strategy=broadcast" not in optimized_of(out)
-        assert out.count() == 25  # same result through the guarded path
-    finally:
-        stats2["winners"].unpersist()
+def test_cdc_prepare_uses_arrow_udf_only(spark, tmp_path):
+    """LWW is one partial-aggregating max_by pass, and sha256 runs as the
+    vectorized pandas UDF — no winner-seq aggregate, no join-back."""
+    from nostr_data_pipeline_spark.cdc.replayer import prepare_batch
+
+    data, t = _cdc_batch(spark, tmp_path)
+    plan = plan_of(prepare_batch(data, t))
+    assert "partial_max_by" in plan       # map-side combine of the winner
+    assert "ArrowEvalPython" in plan      # vectorized pandas UDF
+    assert "BatchEvalPython" not in plan  # never per-row Python
+    assert "BroadcastHashJoin" not in plan and "Join" not in plan
+    assert "_max_seq" not in plan
+
+
+def test_lww_guard_folds_into_winner_agg(spark, tmp_path):
+    """Resolution reads the batch parquet exactly once before the merge, in
+    one aggregation with one shuffle, and needs no cache."""
+    from nostr_data_pipeline_spark.cdc.replayer import prepare_batch
+
+    data, t = _cdc_batch(spark, tmp_path)
+    resolved = prepare_batch(data, t)
+    plan = plan_of(resolved)
+    n_scans = plan.count("FileScan") + plan.count("BatchScan")
+    assert n_scans == 1, f"batch must be scanned once pre-merge, saw {n_scans}"
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "partial_max_by" in plan and "InMemoryRelation" not in plan
+    assert "_max_seq" not in plan
+    assert resolved.count() == 25
 
 
 def test_resolve_lww_composes_into_streaming_plans(spark, tmp_path):
-    """The guard count is an eager batch action; on a STREAMING frame
-    resolve_lww must skip it (foreachBatch is where the guard applies),
-    still build a valid lazy plan, and take the SAFE side of the guard —
-    the shuffle join-back, not an unguarded forced broadcast."""
+    """resolve_lww runs no eager action, so it composes into a streaming
+    frame and plans lazily, as one max_by aggregation with no join."""
     from nostr_data_pipeline_spark.cdc.generator import LogSpec, write_log
     from nostr_data_pipeline_spark.cdc.lww import resolve_lww
     from nostr_data_pipeline_spark.cdc.replayer import LOG_SCHEMA
@@ -154,15 +114,36 @@ def test_resolve_lww_composes_into_streaming_plans(spark, tmp_path):
     narrow = stream.select("repo", "path", "seq", "event_id", "content")
     out = resolve_lww(narrow, ("repo", "path"), "seq", "event_id")
     assert out.isStreaming  # plan built lazily, no eager count crash
-    # guard armed (default ceiling) -> no broadcast hint in the unbounded
-    # plan; an OOM-sized winner set can't be forced onto executors (a
-    # streaming plan can't be optimize()d before start, so assert on the
-    # analyzed logical plan where the hint would appear as ResolvedHint)
-    assert "strategy=broadcast" not in out._jdf.queryExecution().analyzed().toString()
-    # explicit vouch (ceiling=None) restores the forced broadcast
-    vouched = resolve_lww(narrow, ("repo", "path"), "seq", "event_id",
-                          max_broadcast_keys=None)
-    assert "strategy=broadcast" in vouched._jdf.queryExecution().analyzed().toString()
+    # a streaming plan can't be optimize()d before start: assert on the
+    # analyzed logical plan
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "max_by" in analyzed
+    assert "Join" not in analyzed and "_max_seq" not in analyzed
+
+
+def test_bulk_load_merge_does_not_pin_source(spark, tmp_path, monkeypatch):
+    """A CoW merge into a table with no files evaluates its source once, in
+    the write, so it never caches it; a merge that probes the target files
+    first still pins it."""
+    from nostr_data_pipeline_spark.cdc.replayer import prepare_batch
+    from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
+
+    # the written plan is taken at write time: merge unpersists a source it
+    # pinned before it returns
+    plans = []
+    write = SnapshotTable._write_bucketed
+
+    def spy(self, df, *a):
+        plans.append(plan_of(df))
+        return write(self, df, *a)
+
+    monkeypatch.setattr(SnapshotTable, "_write_bucketed", spy)
+    data, t = _cdc_batch(spark, tmp_path)
+    t.merge(spark, prepare_batch(data, t))  # bulk load
+    t.merge(spark, prepare_batch(data, t))  # probed
+    bulk, probed = plans
+    assert "InMemoryRelation" not in bulk
+    assert "InMemoryRelation" in probed
 
 
 def test_corpus_prepare_pushes_lang_filter(spark):

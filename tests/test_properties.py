@@ -10,7 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from nostr_data_pipeline_spark.cdc.generator import LogSpec, make_log_frame, write_log
-from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
+from nostr_data_pipeline_spark.cdc.lww import resolve_lww
 from nostr_data_pipeline_spark.cdc.oracle import reduce_log
 from nostr_data_pipeline_spark.cdc.replayer import replay_log
 from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
@@ -48,31 +48,24 @@ def test_random_log_replay_matches_oracle(spark, tmp_path_factory, spec, n_batch
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(spec=spec_strategy)
 def test_lww_modes_agree(spark, spec):
-    """The resolver's broadcast and shuffle join-backs and the one-pass
-    winner rule (``lww_reduce``) pick the same winner per key."""
+    """The batch resolver picks the oracle's winner per key: the
+    ``(seq, event_id)`` max (the log has no NULL seq)."""
     log = make_log_frame(spec)
     data = log[log["op"] != "schema_change"][
         ["repo", "path", "seq", "event_id", "commit", "content"]
     ]
     if data.empty:
         return
-    df = spark.createDataFrame(data)
-    keys = ("repo", "path")
-    outs = {
-        name: out.toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-        for name, out in (
-            ("broadcast", resolve_lww(df, keys, max_broadcast_keys=None)),
-            ("shuffle", resolve_lww(df, keys, max_broadcast_keys=1)),
-            ("lww_reduce", lww_reduce(df, keys, "seq", "event_id")),
-        )
-    }
-    base = outs["broadcast"]
-    for name in ("shuffle", "lww_reduce"):
-        pd.testing.assert_frame_equal(
-            base[["repo", "path", "seq", "event_id"]],
-            outs[name][["repo", "path", "seq", "event_id"]],
-            check_dtype=False, obj=name,
-        )
+    got = (resolve_lww(spark.createDataFrame(data)).toPandas()
+           .sort_values(["repo", "path"]).reset_index(drop=True))
+    want = (data.sort_values(["seq", "event_id"])
+            .drop_duplicates(["repo", "path"], keep="last")
+            .sort_values(["repo", "path"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(
+        got[["repo", "path", "seq", "event_id", "content"]],
+        want[["repo", "path", "seq", "event_id", "content"]],
+        check_dtype=False,
+    )
 
 
 @settings(max_examples=6, deadline=None,

@@ -58,23 +58,25 @@ def _check_final_state(spark, table: SnapshotTable, expected: pd.DataFrame):
 
 # Differential config matrix: the same log replayed under every config that
 # selects a different plan or metrics path must land on the oracle state.
-# "maxseq" is the default (counted metrics path, broadcast join-back).
+# "maxseq" is the default: CoW with lineage, so the resolved batch is cached
+# and counted per bucket, and the count is the merge's source_buckets hint.
 MATRIX = {
     "maxseq": {},
-    # above the winner-count ceiling the join-back shuffles
-    "maxseq_shuffle": {"max_broadcast_keys": 1},
+    # no lineage job: the first batch bulk-loads the empty table from an
+    # unpinned source, the next probes a pinned one
+    "cow_no_lineage": {"collect_lineage": False},
     "aqe_off": {},
-    # merge-on-read with a forced broadcast: the observed metrics path
-    "mor_observed": {"merge_mode": "mor", "max_broadcast_keys": None},
-    # merge-on-read under the default ceiling: counted path
-    "mor_counted": {"merge_mode": "mor"},
+    # merge-on-read without lineage: the delta write is the only job
+    "mor_observed": {"merge_mode": "mor", "collect_lineage": False},
+    # merge-on-read with lineage: taken from the delta files' footers
+    "mor_lineage": {"merge_mode": "mor"},
 }
 
 
 @pytest.mark.parametrize(
     "n_batches,config",
-    [(2, "maxseq"), (2, "maxseq_shuffle"), (3, "aqe_off"), (2, "mor_observed"),
-     (1, "mor_counted")],
+    [(2, "maxseq"), (2, "cow_no_lineage"), (3, "aqe_off"), (2, "mor_observed"),
+     (1, "mor_lineage")],
 )
 def test_replay_matches_oracle(spark, log_dir, expected, tmp_path, monkeypatch,
                                n_batches, config):
@@ -96,11 +98,10 @@ def test_replay_matches_oracle(spark, log_dir, expected, tmp_path, monkeypatch,
     assert len(batches) == n_batches
     assert sum(b["rows_seen"] for b in batches) == \
         (frame["op"] != "schema_change").sum()
-    observed = config == "mor_observed"
-    assert all(b["rows_resolved_exact"] is not observed for b in batches)
-    if not observed:
-        join_back = "shuffle" if config == "maxseq_shuffle" else "broadcast"
-        assert all(b["lww_join_back"] == join_back for b in batches)
+    assert all(b["rows_resolved_exact"] for b in batches)
+    if merge_mode == "mor":
+        # one row per key: a delta holds exactly the resolved batch
+        assert all(b["rows_resolved"] == b["rows_written"] for b in batches)
     _check_final_state(spark, table, expected)
 
 
@@ -275,9 +276,9 @@ def test_rows_applied_counts_each_row_once(spark, tmp_path):
 
 
 def test_null_key_rows_surfaced_not_silent(spark, tmp_path):
-    """A CDC record with a null key component is unmergeable: both metric
-    regimes must DROP it from the table (never write a null-key row) and
-    SURFACE the drop in metrics instead of silently losing it."""
+    """A CDC record with a null key component is unmergeable: CoW and MoR
+    must DROP it from the table (never write a null-key row) and SURFACE
+    the drop in metrics instead of silently losing it."""
     import pandas as pd
 
     from nostr_data_pipeline_spark.cdc.replayer import (
@@ -300,15 +301,14 @@ def test_null_key_rows_surfaced_not_silent(spark, tmp_path):
 
     t1 = SnapshotTable(str(tmp_path / "t1"), num_buckets=4)
     t1.create(TARGET_BASE_SCHEMA)
-    m1 = replay_batch(spark, t1, batch, "s", 0)  # guarded path
+    m1 = replay_batch(spark, t1, batch, "s", 0)
     assert m1["rows_resolved"] == 2 and m1["rows_seen"] == 3
     assert m1["rows_nullkey_dropped_groups"] == 1
     assert t1.read(spark).count() == 2
 
     t2 = SnapshotTable(str(tmp_path / "t2"), num_buckets=4)
     t2.create(TARGET_BASE_SCHEMA)
-    m2 = replay_batch(spark, t2, batch, "s", 0, merge_mode="mor",
-                      max_broadcast_keys=None)  # vouched fast path
+    m2 = replay_batch(spark, t2, batch, "s", 0, merge_mode="mor")
     assert m2["rows_resolved"] == 2 and m2["rows_seen"] == 3
     assert m2["rows_nullkey_dropped"] == 1
     t2.fold_deltas(spark)
@@ -316,10 +316,10 @@ def test_null_key_rows_surfaced_not_silent(spark, tmp_path):
 
 
 def test_agg_mode_null_key_metrics(spark, tmp_path):
-    """A forced broadcast under CoW (the batch the deleted agg/salted
-    counted fallback used to take) must still EXCLUDE null-key winners from
-    rows_resolved and surface the drop: the null-key group is counted
-    before the null-unsafe join-back drops it."""
+    """A CoW batch without lineage (no count job at all) must still
+    EXCLUDE null-key winners from rows_resolved and surface the drop: the
+    Observations count the null-key rows and groups before the merge drops
+    them."""
     import pandas as pd
 
     from nostr_data_pipeline_spark.cdc.replayer import (
@@ -341,7 +341,7 @@ def test_agg_mode_null_key_metrics(spark, tmp_path):
     batch = spark.createDataFrame(rows, LOG_SCHEMA)
     t = SnapshotTable(str(tmp_path / "t"), num_buckets=4)
     t.create(TARGET_BASE_SCHEMA)
-    m = replay_batch(spark, t, batch, "s", 0, max_broadcast_keys=None)
+    m = replay_batch(spark, t, batch, "s", 0, collect_lineage=False)
     assert m["rows_resolved"] == 2 and m["rows_seen"] == 3
     assert m["rows_nullkey_dropped_groups"] == 1
     assert m["rows_nullkey_dropped"] == 1
@@ -398,36 +398,6 @@ def test_schema_event_footer_fast_path(spark, tmp_path):
         ("stars", "long")]
 
 
-def test_resolve_lww_non_exact_mode_keeps_ties_for_mor(spark):
-    """exact_one_per_key=False returns winner-FILTERED rows (redelivered
-    winners / equal-seq ties survive); the MoR read-side resolution then
-    collapses them to the identical final state the exact mode produces."""
-    from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
-
-    rows = [
-        ("r1", "a", 3, "e3", "new"),
-        ("r1", "a", 3, "e3", "new"),   # verbatim redelivery of the winner
-        ("r1", "a", 1, "e1", "old"),
-        ("r2", "b", 5, "e5", "x"),
-        ("r2", "b", 5, "e9", "y"),     # equal-seq tie, e9 wins on tie col
-    ]
-    df = spark.createDataFrame(rows, ["repo", "path", "seq", "event_id", "v"])
-    loose = resolve_lww(df, ("repo", "path"), "seq", "event_id",
-                        max_broadcast_keys=None, exact_one_per_key=False)
-    got = sorted(tuple(r) for r in loose.collect())
-    # losers gone, winner multiplicity retained
-    assert got == sorted([
-        ("r1", "a", 3, "e3", "new"), ("r1", "a", 3, "e3", "new"),
-        ("r2", "b", 5, "e5", "x"), ("r2", "b", 5, "e9", "y"),
-    ])
-    exact = resolve_lww(df, ("repo", "path"), "seq", "event_id",
-                        max_broadcast_keys=None)
-    # the downstream winner rule collapses loose == exact
-    collapsed = lww_reduce(loose, ("repo", "path"), "seq", "event_id")
-    assert sorted(map(tuple, collapsed.collect())) == \
-        sorted(map(tuple, exact.collect()))
-
-
 def _write_frame_as_log(frame, out_dir, n_files=2):
     """Write a (possibly modified) log frame as parquet part files with the
     generator's exact arrow schema — seq stays a NULLABLE int64."""
@@ -482,14 +452,14 @@ def _null_seq_frame():
 
 
 @pytest.mark.parametrize(
-    "n_batches,config", [(1, "maxseq"), (4, "maxseq"), (2, "maxseq_shuffle")],
+    "n_batches,config", [(1, "maxseq"), (4, "maxseq"), (2, "cow_no_lineage")],
 )
 def test_replay_null_seq_rows_match_oracle(spark, tmp_path, monkeypatch,
                                            n_batches, config):
-    """NULL-seq rows must neither vanish (multi-batch slicing, winner
-    join-back) nor win the LWW race (pandas NaN-sorts-last artifact): a
-    single batch, a seq-sliced replay and the shuffle join-back must land
-    on the oracle's normalized state. ``config`` names a MATRIX entry."""
+    """NULL-seq rows must neither vanish (multi-batch slicing) nor win the
+    LWW race (pandas NaN-sorts-last artifact): a single batch, a seq-sliced
+    replay and a replay without the lineage job must land on the oracle's
+    normalized state. ``config`` names a MATRIX entry."""
     frame = _null_seq_frame()
     log_dir = str(tmp_path / "log")
     _write_frame_as_log(frame, log_dir)
@@ -511,34 +481,19 @@ def test_replay_null_seq_rows_match_oracle(spark, tmp_path, monkeypatch,
 
 
 def test_resolve_lww_all_null_seq_group_kept_all_modes(spark):
-    """An all-NULL-seq key must survive resolution under both join-backs
-    and in the one-pass winner rule, with the same winner (tie column
-    decides) — the join-back once used a plain equality filter that
-    dropped the whole group."""
-    from nostr_data_pipeline_spark.cdc.lww import lww_reduce, resolve_lww
+    """An all-NULL-seq key must survive resolution, with its tie column
+    deciding the winner (an equality filter on a NULL max seq once dropped
+    the whole group)."""
+    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
 
     df = spark.createDataFrame(
         [("r", "p", None, "e1", "old"), ("r", "p", None, "e2", "new"),
          ("r", "q", 7, "e3", "real")],
         "repo string, path string, seq long, event_id string, content string",
     )
-    outs = {"broadcast": resolve_lww(df, max_broadcast_keys=None),
-            "shuffle": resolve_lww(df, max_broadcast_keys=1),
-            "lww_reduce": lww_reduce(df, ("repo", "path"), "seq", "event_id")}
-    for name, out in outs.items():
-        got = {(r["repo"], r["path"]): r["content"] for r in out.collect()}
-        assert got == {("r", "p"): "new", ("r", "q"): "real"}, name
-
-
-def test_resolve_lww_rejects_reserved_columns(spark):
-    from nostr_data_pipeline_spark.cdc.lww import resolve_lww
-
-    df = spark.createDataFrame(
-        [("r", "p", 1, "e", 9)],
-        "repo string, path string, seq long, event_id string, _max_seq long",
-    )
-    with pytest.raises(ValueError, match="_max_seq"):
-        resolve_lww(df)
+    got = {(r["repo"], r["path"]): r["content"]
+           for r in resolve_lww(df).collect()}
+    assert got == {("r", "p"): "new", ("r", "q"): "real"}
 
 
 def test_replay_log_empty_dir_chunked_folds_deltas(spark, tmp_path):
@@ -559,3 +514,104 @@ def test_replay_log_empty_dir_chunked_folds_deltas(spark, tmp_path):
     replay_log(spark, table, empty, stream_id="s2", n_batches=4,
                merge_mode="mor", compact_every=1)
     assert not any(table.manifest().get("deltas", {}).values())
+
+
+def _returns_within(fn, timeout_s=120):
+    """``fn()`` run in a daemon thread: an Observation that never fills
+    blocks its ``get`` forever, and that must fail the test, not stall the
+    suite."""
+    import threading
+
+    box = {}
+
+    def run():
+        try:
+            box["out"] = fn()
+        except BaseException as e:  # re-raised on the test thread
+            box["err"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=timeout_s)
+    assert not t.is_alive(), f"no return within {timeout_s}s (hung)"
+    if "err" in box:
+        raise box["err"]
+    return box["out"]
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_replay_batch_metrics_never_hang(spark, tmp_path, merge_mode):
+    """The batch metrics ride Observations, and ``Observation.get`` blocks
+    until an action evaluates the observed plan. Every batch shape must
+    still return, with exact rows_seen: an empty data batch, a batch of
+    only schema_change rows, a normal batch and its replay (skipped), into
+    an empty and a non-empty table, with lineage on and off."""
+    from pyspark.sql import functions as F
+
+    from nostr_data_pipeline_spark.cdc.replayer import (
+        LOG_SCHEMA, TARGET_BASE_SCHEMA, replay_batch,
+    )
+
+    spec = LogSpec(n_events=300, n_repos=3, paths_per_repo=5, seed=9,
+                   n_files=1)
+    d = str(tmp_path / "log")
+    write_log(d, spec)
+    frame = make_log_frame(spec)
+    n_data = int((frame["op"] != "schema_change").sum())
+    log = spark.read.schema(LOG_SCHEMA).parquet(d)
+    schema_only = log.filter(F.col("op") == "schema_change")
+    assert schema_only.count() > 0
+    batches = [(log.filter(F.col("seq") < 0), 0), (schema_only, 0),
+               (log, n_data)]
+    for target in ("empty", "nonempty"):
+        for lineage in (True, False):
+            t = SnapshotTable(str(tmp_path / f"{target}-{lineage}"),
+                              num_buckets=4)
+            t.create(TARGET_BASE_SCHEMA)
+            if target == "nonempty":
+                replay_batch(spark, t, log.filter(F.col("seq") < 100),
+                             "seed", 0, merge_mode=merge_mode)
+            case = f"{target} lineage={lineage}"
+            for b, (batch, want) in enumerate(batches):
+                m = _returns_within(partial(
+                    replay_batch, spark, t, batch, "s", b,
+                    collect_lineage=lineage, merge_mode=merge_mode))
+                assert m["rows_seen"] == want, (case, b, m)
+                assert m["rows_resolved_exact"], (case, b)
+            m = _returns_within(partial(
+                replay_batch, spark, t, log, "s", len(batches) - 1,
+                collect_lineage=lineage, merge_mode=merge_mode))
+            assert m == {"skipped_replay": True, "batch_id": 2}, case
+            assert t.read(spark).count() == len(reduce_log(frame)), case
+
+
+def test_replay_jobs_carry_phase_descriptions(spark, tmp_path):
+    """Every Spark job of a one-batch replay_log carries one of the
+    replayer's phase descriptions, and the caller's own description is
+    back afterwards."""
+    spec = LogSpec(n_events=200, n_repos=2, paths_per_repo=4, seed=4,
+                   n_files=1)
+    d = str(tmp_path / "log")
+    write_log(d, spec)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobDescription("caller")
+    try:
+        first = int(jsc.dagScheduler().nextJobId())
+        replay_log(spark, SnapshotTable(str(tmp_path / "t"), num_buckets=4),
+                   d)
+        last = int(jsc.dagScheduler().nextJobId())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    desc = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if first <= j.jobId() < last:
+            desc[j.jobId()] = j.description().getOrElse(None)
+    assert len(desc) == last - first > 0
+    phases = {"replay: schema events", "replay: lineage",
+              "replay: resolve+write"}
+    assert set(desc.values()) <= phases, desc

@@ -3,32 +3,20 @@
 
 from __future__ import annotations
 
-import pytest
-
 from nostr_data_pipeline_spark.cdc.generator import LogSpec, make_log_frame, write_log
 from nostr_data_pipeline_spark.cdc.oracle import reduce_log
 from nostr_data_pipeline_spark.cdc.replayer import LOG_SCHEMA, replay_batch, replay_log
 from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
 
 # zipf_a=6 makes repo-0000 receive ~97% of all events: the hot-key regime
-# the partial max(seq) aggregation exists for
+# the partial (map-side) max_by aggregation exists for
 HOT = LogSpec(n_events=5000, n_repos=40, paths_per_repo=10, zipf_a=6.0,
               seed=5, n_files=4)
 
 
-@pytest.mark.parametrize("max_broadcast_keys", [5_000_000, 1],
-                         ids=["maxseq", "maxseq_shuffle"])
-def test_hot_repo_skew_all_modes(spark, tmp_path, monkeypatch,
-                                 max_broadcast_keys):
-    """The hot key under both winner join-backs (broadcast, and shuffle
-    above the ceiling)."""
-    from functools import partial
-
-    from nostr_data_pipeline_spark.cdc import replayer
-
-    monkeypatch.setattr(replayer, "replay_batch",
-                        partial(replayer.replay_batch,
-                                max_broadcast_keys=max_broadcast_keys))
+def test_hot_repo_skew_matches_oracle(spark, tmp_path):
+    """The hot key through the one-pass resolver and a two-batch CoW
+    replay."""
     log_dir = str(tmp_path / "log")
     write_log(log_dir, HOT)
     expected = reduce_log(make_log_frame(HOT))

@@ -182,10 +182,10 @@ def test_streaming_mor_replay_matches_oracle(spark, tmp_path, expected):
 
 
 def test_streaming_mor_vouched_fast_path(spark, tmp_path, expected):
-    """max_broadcast_keys=None + merge_mode='mor': the one-job-per-batch
-    trickle fast path — no guard job; rows metrics ride the delta write's
-    observation and the per-bucket lineage comes from parquet footers
-    (recorded in every MoR commit's manifest metrics). Final state must
+    """merge_mode='mor': the one-job-per-batch trickle fast path — no
+    count job; the row metrics ride Observations filled by the delta write
+    and the per-bucket lineage comes from parquet footers (recorded in
+    every MoR commit's manifest metrics). Final state must
     match the oracle, and the footer lineage must sum to the delta rows."""
     import json
 
@@ -194,7 +194,7 @@ def test_streaming_mor_vouched_fast_path(spark, tmp_path, expected):
     table = SnapshotTable(str(tmp_path / "tbl"), num_buckets=8)
     rep = StreamingReplayer(table, log_dir, str(tmp_path / "ckpt"),
                             max_files_per_trigger=2, merge_mode="mor",
-                            compact_every=2, max_broadcast_keys=None)
+                            compact_every=2)
     rep.run_to_completion(spark)
     table.fold_deltas(spark)
     _final_matches(spark, table, expected)
