@@ -644,21 +644,36 @@ class SnapshotTable:
         return max(0, _parse_byte_size(raw))
 
     def _mor_resolved(self, spark: SparkSession, m: dict[str, Any],
-                      base_files: list[str],
-                      delta_files: list[str]) -> DataFrame:
-        """Resolve a merge-on-read selection WITHOUT shuffling the base:
-        base rows hold one live row per key by CoW invariant, so any base key
-        absent from the delta key set is already the winner — it passes
-        through a map-side broadcast ANTI join untouched (at 100 TB this is
-        the difference between a scan and a full-table shuffle per read).
-        Only touched base rows (broadcast SEMI join) union the deltas into
-        the per-key (seq, tie)-max aggregation. Falls back to the plain
-        full resolve when the deltas exceed ``mor_broadcast_bytes`` on disk
-        (the key-set relation would no longer be broadcast-safe)."""
+                      base_files: list[str], delta_files: list[str],
+                      key_pred: F.Column | None = None) -> DataFrame:
+        """Resolve a merge-on-read selection to one row per key.
+
+        A point read (``read_keys``) passes its probe predicate as
+        ``key_pred``: the base and delta files are read as one relation and
+        filtered BEFORE the per-key (seq, tie)-max aggregation, so only the
+        probed keys' rows are resolved, in one scan plus one small aggregate
+        with no key-set broadcast. Sound because LWW is decided per key and
+        the predicate names key columns only (a non-key filter ahead of the
+        resolve would drop a key's winner and resurrect its stale row). With
+        no delta file selected the filtered base is already resolved.
+
+        A full scan resolves WITHOUT shuffling the base: base rows hold one
+        live row per key by CoW invariant, so any base key absent from the
+        delta key set is already the winner — it passes through a map-side
+        broadcast ANTI join untouched (at 100 TB this is the difference
+        between a scan and a full-table shuffle per read). Only touched base
+        rows (broadcast SEMI join) union the deltas into the aggregation.
+        Falls back to the plain full resolve when the deltas exceed
+        ``mor_broadcast_bytes`` on disk (the key-set relation would no
+        longer be broadcast-safe)."""
         schema = T.StructType.fromJson(m["schema"])
+        rs, rt = self._resolution_cols(m)
+        if key_pred is not None:
+            rows = self._read_files(spark, base_files + delta_files, schema)
+            rows = rows.filter(key_pred)
+            return lww_reduce(rows, self.key_cols, rs, rt) if delta_files else rows
         base = self._read_files(spark, base_files, schema)
         delta = self._read_files(spark, delta_files, schema)
-        rs, rt = self._resolution_cols(m)
         ceiling = self._mor_broadcast_ceiling(spark)
         delta_bytes = 0
         for f in delta_files:
@@ -909,8 +924,8 @@ class SnapshotTable:
         version whose data dirs were vacuumed raises a clear error here
         instead of dying inside the parquet scan). ``buckets`` restricts the
         scan to the named buckets' files; ``files`` restricts it to an
-        explicit relpath list (the file-pruning hook used by read_keys and
-        changes — the caller must pass files belonging to the manifest).
+        explicit relpath list (the file-pruning hook used by changes — the
+        caller must pass files belonging to the manifest).
 
         ``where``: SQL predicate applied to the result (same as
         ``.filter(where)``) — passing it HERE additionally prunes the file
@@ -1132,7 +1147,12 @@ class SnapshotTable:
         layout prunes further. ``keys`` is a small driver-side list (a CLI
         lookup, a dim probe) — the predicate is an OR of per-key conjunctions
         pushed into the scan. An empty key list returns an empty frame (no
-        scan)."""
+        scan).
+
+        Under live merge-on-read deltas the predicate filters the base and
+        delta rows BEFORE the LWW resolve (``_mor_resolved``), so only the
+        probed keys' rows are resolved; full scans (``read``) keep the
+        broadcast key-set plan."""
         if not keys:
             return self.read(
                 spark, include_tombstones=include_tombstones,
@@ -1148,17 +1168,12 @@ class SnapshotTable:
         # degrade to bucket granularity for such probes, never crash
         if any(v is None for kt in key_tuples for v in kt):
             stats = {}
-        deltas = self._deltas_of(m)
-        cand = [
-            f
-            for b in buckets
-            for f in m["buckets"].get(str(b), []) + deltas.get(str(b), [])
-            if (st := stats.get(f)) is None
-            or any(self._key_in_ranges(kt, st) for kt in key_tuples)
-        ]
-        df = self.read(spark, include_tombstones=include_tombstones,
-                       with_payload=with_payload, payload_col=payload_col,
-                       seq_col=seq_col, files=cand)
+        base_sel, delta_sel = (
+            [f for b in buckets for f in layer.get(str(b), [])
+             if (st := stats.get(f)) is None
+             or any(self._key_in_ranges(kt, st) for kt in key_tuples)]
+            for layer in (m["buckets"], self._deltas_of(m))
+        )
         # Predicate shape matters at fan-out: a left-deep OR chain of ~1000
         # per-key conjunctions overflows the JVM analyzer stack (Catalyst
         # walks expressions recursively — observed StackOverflowError from
@@ -1182,7 +1197,9 @@ class SnapshotTable:
                     for i in range(0, len(terms), 2)
                 ]
             pred = terms[0]
-        return df.filter(pred)
+        df = self._mor_resolved(spark, m, base_sel, delta_sel, pred)
+        return self._project(df, m, include_tombstones, with_payload,
+                             payload_col, seq_col)
 
     def changes(self, spark: SparkSession, from_version: int,
                 to_version: int | None = None,

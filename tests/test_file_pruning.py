@@ -648,3 +648,33 @@ def test_point_read_wide_fanout_analyzes(spark, tmp_path):
                  tie_col="text")
     got = single.read_keys(spark, [(i,) for i in range(2000)], seq_col="last_seq")
     assert got.count() == 50
+
+
+def test_point_read_wide_fanout_analyzes_under_live_deltas(spark, tmp_path):
+    """The wide fan-out probe with a pending merge-on-read delta: the key
+    predicate now sits below a union and the LWW aggregate, and must still
+    analyze (balanced or-tree / flat In) and return every resolved row."""
+    t = _load(spark, tmp_path)
+    t.merge(spark, _df(spark, [("r", "p0003", "new-3", 2, "e2-3"),
+                               ("r", "p0045", "new-45", 2, "e2-45")]),
+            merge_mode="mor")
+    keys = [("r", f"p{i:04d}") for i in range(1500)]
+    got = {r["path"]: r["content"] for r in t.read_keys(spark, keys).collect()}
+    assert len(got) == 41  # p0000..p0039 plus the delta-only p0045
+    assert got["p0003"] == "new-3" and got["p0045"] == "new-45"
+    assert got["p0004"] == "v1-4"
+
+    single = SnapshotTable(str(tmp_path / "single"), key_cols=("doc_id",),
+                           num_buckets=2)
+    single.create(T.StructType.fromDDL("doc_id long, text string, last_seq long"))
+    sdf = spark.createDataFrame([(i, f"d{i}") for i in range(50)],
+                                "doc_id long, text string")
+    single.merge(spark, sdf.withColumn("last_seq", F.lit(1).cast("long")),
+                 tie_col="text")
+    upd = spark.createDataFrame([(10, "d10-new", 2), (60, "d60", 2)],
+                                "doc_id long, text string, last_seq long")
+    single.merge(spark, upd, merge_mode="mor", tie_col="text")
+    got = {r["doc_id"]: r["text"] for r in single.read_keys(
+        spark, [(i,) for i in range(2000)], seq_col="last_seq").collect()}
+    assert len(got) == 51
+    assert got[10] == "d10-new" and got[60] == "d60" and got[11] == "d11"

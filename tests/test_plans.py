@@ -173,3 +173,37 @@ def test_empty_read_optimizes_away_the_merge_join(spark, tmp_path):
                                  "full_outer")
     assert "Join" not in optimized_of(joined)
     assert joined.count() == 3
+
+
+def test_pending_point_read_resolves_probed_rows_only(spark, tmp_path):
+    """With live merge-on-read deltas a point read filters the base and
+    delta rows by the probe key BEFORE the LWW resolve: no delta key-set
+    broadcast, no anti/semi join, and every parquet scan carries the key in
+    its PushedFilters. The full scan keeps the broadcast key-set plan."""
+    from pyspark.sql import types as T
+
+    from nostr_data_pipeline_spark.tables.snapshot_table import SnapshotTable
+
+    schema = T.StructType.fromDDL(
+        "repo string, path string, content string, last_seq long, "
+        "last_event_id string")
+    t = SnapshotTable(str(tmp_path / "tbl"), num_buckets=2,
+                      target_file_rows=10)
+    t.create(schema)
+    t.merge(spark, spark.createDataFrame(
+        [("r", f"p{i:04d}", "v1", 1, f"e{i}") for i in range(40)], schema))
+    for seq in (2, 3):
+        t.merge(spark, spark.createDataFrame(
+            [("r", "p0003", f"v{seq}", seq, f"e{seq}")], schema),
+            merge_mode="mor")
+    df = t.read_keys(spark, [("r", "p0003")])
+    plan = plan_of(df)
+    for op in ("BroadcastExchange", "LeftAnti", "LeftSemi"):
+        assert op not in plan, plan
+    scans = plan.split("FileScan parquet")[1:]
+    assert scans  # the base and delta files of the key's bucket
+    for scan in scans:
+        pushed = scan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "EqualTo(path,p0003)" in pushed, scan
+    assert [(r["content"], r["last_seq"]) for r in df.collect()] == [("v3", 3)]
+    assert "LeftAnti" in plan_of(t.read(spark))
